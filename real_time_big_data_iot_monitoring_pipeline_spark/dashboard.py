@@ -3,9 +3,11 @@
 canonical sensor-reading schema — the migration target for a reference
 user: every widget's numbers come from these functions instead of pandas.
 
-Each function returns a DataFrame (lazy plan); a serving layer renders
-them.  Everything composes from the operator library, so the whole
-dashboard is a handful of declarative plans over one shared scan.
+Each panel function returns a DataFrame (lazy plan); a serving layer
+renders them.  Everything composes from the operator library.
+``full_dashboard`` is the one eager step: once per call it materializes
+its input as a local checkpoint, and all 12 panels read that instead of
+re-scanning the input.
 """
 
 from __future__ import annotations
@@ -161,18 +163,32 @@ def geo_map(readings: DataFrame, location_dim: DataFrame) -> DataFrame:
 
 def full_dashboard(readings: DataFrame, location_dim: DataFrame) -> dict[str, DataFrame]:
     """Every dashboard panel as a named plan — the complete reference
-    surface in one call."""
+    surface in one call.
+
+    The one eager step: ``readings`` is materialized as a local
+    checkpoint (its Spark jobs run in this call), and every panel is a
+    lazy plan over that checkpoint, so executing the 12 panels never
+    scans ``readings`` again.  The alert feed and the forecasts are built
+    once and also feed ``severity`` and ``model_quality``.  Each call takes a fresh checkpoint, so a refresh
+    always sees the current ``readings``.  Spark's ContextCleaner frees
+    the checkpoint's blocks once the returned panels are unreachable and
+    garbage-collected.  (A ``cache()`` here would be matched by plan on
+    the next call over the same ``readings`` and never be unpersisted.)
+    """
+    readings = readings.localCheckpoint(eager=True)
+    feed = alert_feed(readings)
+    fits = forecasts(readings)
     return {
         "kpis": kpis(readings),
-        "alerts": alert_feed(readings),
-        "severity": severity_summary(readings),
+        "alerts": feed,
+        "severity": alerts.severity_rollup(feed),
         "location_stats": location_stats(readings),
         "describe": temperature_describe(readings),
         "histogram": temperature_histogram(readings),
         "correlations": metric_correlations(readings),
         "trend": trend_series(readings),
         "trend_dense": trend_series_dense(readings),
-        "forecasts": forecasts(readings),
-        "model_quality": model_quality(readings),
+        "forecasts": fits,
+        "model_quality": regression.quality_gate(fits),
         "geo": geo_map(readings, location_dim),
     }

@@ -232,18 +232,16 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "text_truncate_tokens",
     "vocab_build_topk",
     "anova_value_by_type",
+    "bloom_prune_semijoin",
     "bpe_apply_tokenize",
     "bpe_pair_counts",
     "bpe_train_merges",
-    "customer_rfm_segments",
     "dedup_cut_spans",
     "dedup_exact_substring",
     "dedup_survivorship",
     "entity_match_candidates",
-    "feature_standardize",
     "lang_id_confusion_matrix",
     "pagerank_trade_graph",
-    "ship_delay_profile",
     "text_gopher_census",
     "text_zipf_fit",
     "tfidf_similar_pairs",
@@ -253,31 +251,21 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "dedup_ngram_containment",
     "describe_stats",
     "entity_match_sorted_neighborhood",
-    "exact_quantiles_distributed",
-    "funnel_latency_profile",
     "global_kpis",
-    "grouped_weighted_median",
-    "kaplan_meier_repurchase",
-    "pareto_frontier_customers",
     "poisson_bootstrap_ci",
     "twap_per_user",
-    "weighted_median_price",
     "bigram_perplexity_score",
     "boilerplate_ngram_census",
     "dedup_components_incremental_smalldelta",
     "filter_yield_sweep",
     "geo_status_map",
     "heaps_law_vocab_growth",
-    "iqr_anomaly",
     "pad_waste_bucketing",
     "pmi_collocations",
     "regression_per_group",
-    "rolling_avg_20",
     "text_readability_scores",
     "ab_cuped_adjustment",
     "ab_power_mde",
-    "abc_classification",
-    "binaryfile_image_census",
     "bpe_train_merges_batched",
     "cluster_bootstrap_ci",
     "fdr_bh_correction",
@@ -285,28 +273,17 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "kendall_tau_daily",
     "kfold_regression_stability",
     "ks_two_sample_test",
-    "ma_diff_trend",
     "mann_whitney_utest",
-    "nelson_aalen_hazard",
-    "parquet_schema_evolution",
-    "probe_calibration_ece",
-    "psi_value_drift",
     "spearman_qty_price",
-    "topn_per_group",
-    "trimmed_winsorized_means",
     "fuzzy_join_deletion1",
-    "layout_zorder_stats",
     "multimodal_phash_neardups",
-    "quantile_normalize_feature",
     "rag_context_packing",
     "setsim_prefix_filter_join",
     "tokenizer_fertility_by_lang",
-    "brier_score_decomposition",
     "cohens_kappa_agreement",
     "corpus_shard_stats",
     "corpus_token_budget",
     "cube_type_day_stats",
-    "decision_stump_exact_split",
     "decontamination_overlap",
     "dedup_canonical",
     "dedup_exact_stats",
@@ -314,15 +291,38 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "dedup_simhash_checked",
     "embedding_dedup_components",
     "fellegi_sunter_linkage",
-    "kcore_decomposition",
-    "layout_hilbert_stats",
     "naive_bayes_lang_classifier",
-    "acctbal_decile_profile",
     "dedup_components_incremental",
     "embedding_cosine_neardups",
     "embedding_kmeans_clusters",
     "multimodal_decode",
     "multimodal_frame_sample",
+    "multimodal_resize",
+    "pyds_bloom_point_lookup",
+    "pyds_branch_tag_travel",
+    "pyds_incremental_agg_from_cdf",
+    "pyds_manifest_stream_tail",
+    "pyds_medallion_bronze_silver",
+    "pyds_mor_then_cow_delete",
+    "pyds_null_range_delete",
+    "pyds_optimize_zorder_pruning",
+    "pyds_pruned_read_logical",
+    "pyds_rename_evolution",
+    "pyds_shallow_clone_diverge",
+    "pyds_sink_change_feed",
+    "pyds_sink_check_constraint",
+    "pyds_sink_compaction",
+    "pyds_sink_delete_where",
+    "pyds_sink_merge_upsert",
+    "pyds_sink_mor_delete",
+    "pyds_sink_restore",
+    "pyds_sink_roundtrip",
+    "pyds_sink_schema_evolution",
+    "pyds_sink_stats_pruning",
+    "pyds_sink_time_travel",
+    "pyds_sink_vacuum",
+    "pyds_sink_write_audit_publish",
+    "pyds_stream_counts",
 )
 
 # Rotating sf0.1 EXECUTION cohort (round-11 verdict item 3).  The CUPED

@@ -1,7 +1,7 @@
 """End-to-end test of the dashboard facade: every panel of the reference
 dashboard computes over the canonical sensor schema, produces sane
-values, and the whole surface runs as a set of lazy plans over one
-generated dataset."""
+values, and the whole surface reads one materialization of its input
+per call."""
 
 from __future__ import annotations
 
@@ -66,15 +66,99 @@ def test_time_window_filter(spark, readings):
     assert span_us <= 2 * 3600 * 1000000
 
 
-def test_whole_surface_is_lazy_single_scan(spark, readings, panels):
-    """All panels are plans, not materialized results — building the full
-    dashboard triggers no jobs (laziness is what lets a serving layer
-    choose caching/scheduling)."""
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    dashboard.full_dashboard(readings, sensors.location_dim(spark))
-    after = tracker.getJobIdsForGroup(None)
-    assert before == after
+def _checkpoint_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs behind the checkpointed (LogicalRDD) leaves of a
+    panel's plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+
+
+def test_whole_surface_is_single_scan(spark, readings):
+    """Building the dashboard submits exactly the jobs of one local
+    checkpoint of its input, and executing all 12 panels afterwards never
+    scans the input relation again: every panel reads the checkpoint."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    readings.count()  # fill the fixture's cache outside the counted jobs
+    try:
+        sc.setJobGroup("dashboard-test-checkpoint", "reference checkpoint")
+        readings.localCheckpoint(eager=True)
+        sc.setJobGroup("dashboard-test-build", "full_dashboard build")
+        panels = dashboard.full_dashboard(readings, sensors.location_dim(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    reference = tracker.getJobIdsForGroup("dashboard-test-checkpoint")
+    built = tracker.getJobIdsForGroup("dashboard-test-build")
+    assert len(built) == len(reference) >= 1
+    assert len(panels) == 12
+    for name, df in panels.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" in plan, name
+        assert "InMemoryTableScan" not in plan and "FileScan" not in plan, (
+            f"panel {name} re-scans the input:\n{plan}"
+        )
+
+
+def test_each_call_takes_a_fresh_checkpoint(spark, readings):
+    """Two full_dashboard calls never share a materialization: a second
+    call sees a changed input, and two calls on the same input checkpoint
+    it into different RDDs (a cross-call cache would break both)."""
+    dim = sensors.location_dim(spark)
+    dropped = sensors.LOCATIONS[0][0]
+    first = dashboard.full_dashboard(readings, dim)["kpis"]
+    fewer = dashboard.full_dashboard(readings.filter(F.col("location") != dropped), dim)["kpis"]
+    assert fewer.collect()[0].n_locations == first.collect()[0].n_locations - 1
+
+    again = dashboard.full_dashboard(readings, dim)["kpis"]
+    ids_first, ids_again = _checkpoint_rdd_ids(first), _checkpoint_rdd_ids(again)
+    assert len(ids_first) == len(ids_again) == 1
+    assert ids_first != ids_again
+
+
+def test_panels_match_direct_functions_and_duckdb(spark, tmp_path):
+    """Oracle for the shared materialization: over a seeded history staged
+    as parquet and windowed to 24 h, each panel of full_dashboard has the
+    same digest (row count + sum of row xxhash64) as its public panel
+    function applied directly to the window, and kpis / location_stats
+    equal DuckDB over the same parquet."""
+    from perfbench.dashboard_refresh import WINDOW_HOURS, digest, duckdb_oracle, generate
+
+    from real_time_big_data_iot_monitoring_pipeline_spark.sources import tables
+
+    path = tmp_path / "readings.parquet"
+    generate(7, str(path))
+    w = dashboard.filter_window(
+        tables.load_table(spark, str(tmp_path), "readings"), hours=WINDOW_HOURS
+    )
+    dim = sensors.location_dim(spark)
+    direct = {
+        "kpis": dashboard.kpis(w),
+        "alerts": dashboard.alert_feed(w),
+        "severity": dashboard.severity_summary(w),
+        "location_stats": dashboard.location_stats(w),
+        "describe": dashboard.temperature_describe(w),
+        "histogram": dashboard.temperature_histogram(w),
+        "correlations": dashboard.metric_correlations(w),
+        "trend": dashboard.trend_series(w),
+        "trend_dense": dashboard.trend_series_dense(w),
+        "forecasts": dashboard.forecasts(w),
+        "model_quality": dashboard.model_quality(w),
+        "geo": dashboard.geo_map(w, dim),
+    }
+    panels = dashboard.full_dashboard(w, dim)
+    assert panels.keys() == direct.keys()
+    for name, df in panels.items():
+        assert digest(df) == digest(direct[name]), name
+
+    duck_kpis, duck_locs = duckdb_oracle(str(path))
+    assert tuple(panels["kpis"].collect()[0]) == duck_kpis
+    assert {r[0]: tuple(r[1:]) for r in panels["location_stats"].collect()} == duck_locs
 
 
 def test_trend_dense_fills_dropped_samples(spark):
