@@ -266,6 +266,9 @@ def main() -> None:
         # Eager checkpoints are NOT memoized: they re-execute inside the
         # timed build() below, so checkpoint work is now honestly timed.
         q.build(spark, sf_dir)
+        # A cache() registered by the staging build would be matched by
+        # plan in the timed build and hand it pre-computed work.
+        spark.catalog.clearCache()
         # Timed region = a fresh build() + the noop save: driver-side
         # plan compilation (tens of ms) rides along, identical for every
         # query and round-comparable; build_sec is stamped per query in
@@ -373,11 +376,14 @@ def main() -> None:
         "applies": sf_val == 0.1,
     }
     print(f"envelope: {envelope}", file=sys.stderr)
-    # Per-query maps + dashboard widget breakdown go to stderr AND a
-    # side file; the single stdout line stays COMPACT (round-7 verdict
-    # "What's wrong #1": the 3.5 kB combined line outgrew the driver's
-    # tail capture and arrived head-clipped -> BENCH_r07.json had
-    # `"parsed": null`).  Keep the stdout line well under 1 kB.
+    # The full detail (normalized and build-time maps, dashboard widget
+    # breakdown) goes to stderr AND a side file; the single stdout line
+    # stays COMPACT (round-7 verdict "What's wrong #1": the 3.5 kB
+    # combined line outgrew the driver's tail capture and arrived
+    # head-clipped -> BENCH_r07.json had `"parsed": null`).  Of the maps
+    # it carries only `queries` (name -> sec, ms resolution, about 1.1 kB
+    # for the 36 headline queries) so a change in `value` can be
+    # attributed per query; keep the line under 2 kB.
     detail = {
         "metric": "headline_queries_total_runtime",
         "value": total,
@@ -433,6 +439,7 @@ def main() -> None:
                 "load_factor": load_factor,
                 "load_factor_applied": load_factor_applied,
                 "n_queries": len(timings),
+                "queries": timings,
                 "dashboard_wall_sec": dashboard["refresh_wall_sec"],
                 "dashboard_within_budget": dashboard["within_budget"],
                 "sf": sf_val,

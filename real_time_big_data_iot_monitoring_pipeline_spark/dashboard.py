@@ -6,12 +6,19 @@ user: every widget's numbers come from these functions instead of pandas.
 Each panel function returns a DataFrame (lazy plan); a serving layer
 renders them.  Everything composes from the operator library.
 ``full_dashboard`` is the one eager step: once per call it materializes
-its input as a local checkpoint, and all 12 panels read that instead of
-re-scanning the input.
+its input as a local checkpoint, builds all 12 panels over that, and
+materializes the 12 panels concurrently, one Spark job stream per panel,
+so a refresh keeps every task slot busy and executing a panel afterwards
+only reads its own checkpoint.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -161,34 +168,67 @@ def geo_map(readings: DataFrame, location_dim: DataFrame) -> DataFrame:
     )
 
 
-def full_dashboard(readings: DataFrame, location_dim: DataFrame) -> dict[str, DataFrame]:
-    """Every dashboard panel as a named plan — the complete reference
-    surface in one call.
+def _materialize(panel: DataFrame) -> DataFrame:
+    """``panel`` as an eager local checkpoint; if running it raises, the
+    lazy plan itself, so the error surfaces when that panel is executed."""
+    try:
+        return panel.localCheckpoint(eager=True)
+    except (PySparkException, Py4JJavaError):
+        return panel
 
-    The one eager step: ``readings`` is materialized as a local
-    checkpoint (its Spark jobs run in this call), and every panel is a
-    lazy plan over that checkpoint, so executing the 12 panels never
-    scans ``readings`` again.  The alert feed and the forecasts are built
-    once and also feed ``severity`` and ``model_quality``.  Each call takes a fresh checkpoint, so a refresh
-    always sees the current ``readings``.  Spark's ContextCleaner frees
-    the checkpoint's blocks once the returned panels are unreachable and
-    garbage-collected.  (A ``cache()`` here would be matched by plan on
-    the next call over the same ``readings`` and never be unpersisted.)
+
+def full_dashboard(readings: DataFrame, location_dim: DataFrame) -> dict[str, DataFrame]:
+    """Every dashboard panel as a named, materialized DataFrame — the
+    complete reference surface in one call.
+
+    ``readings`` is materialized once as a local checkpoint, and the
+    panel plans are built over it on the calling thread.  As soon as a
+    plan is built, a thread of its own materializes it as an eager local
+    checkpoint, so the panels' Spark jobs share the task slots instead
+    of queueing behind each other.  The threads inherit the
+    caller's job group and description, so the panel jobs are attributed
+    to the call that built them.  ``severity`` and ``model_quality`` are
+    derived from the materialized ``alerts`` and ``forecasts``, so the
+    alert feed and the per-location fits run once per call.  A panel
+    whose materialization raises is returned as its lazy plan and fails
+    only when executed; the other panels are unaffected.
+
+    Each call takes fresh checkpoints, so a refresh always sees the
+    current ``readings``.  Spark's ContextCleaner frees the input
+    checkpoint once no returned panel refers to it (a panel checkpoint
+    does not; a failed panel's lazy plan does), and each panel's blocks
+    once that panel is unreachable and garbage-collected.  (A ``cache()``
+    here would be matched by plan on the next call over the same
+    ``readings`` and never be unpersisted.)
     """
     readings = readings.localCheckpoint(eager=True)
-    feed = alert_feed(readings)
-    fits = forecasts(readings)
-    return {
-        "kpis": kpis(readings),
-        "alerts": feed,
-        "severity": alerts.severity_rollup(feed),
-        "location_stats": location_stats(readings),
-        "describe": temperature_describe(readings),
-        "histogram": temperature_histogram(readings),
-        "correlations": metric_correlations(readings),
-        "trend": trend_series(readings),
-        "trend_dense": trend_series_dense(readings),
-        "forecasts": fits,
-        "model_quality": regression.quality_gate(fits),
-        "geo": geo_map(readings, location_dim),
-    }
+    session = readings.sparkSession
+    with ThreadPoolExecutor(max_workers=12) as pool:  # one thread per panel
+
+        def submit(target, *args):
+            # wrapped per task, so each task gets its own copy of the
+            # caller's local properties (its SQL executions set and clear
+            # one of them)
+            return pool.submit(inheritable_thread_target(session)(target), *args)
+
+        def derived(source, derive):
+            # submitted after ``source``, so it never waits on a queued task
+            return submit(lambda: _materialize(derive(source.result())))
+
+        feed = submit(_materialize, alert_feed(readings))
+        fits = submit(_materialize, forecasts(readings))
+        panels = {
+            "kpis": submit(_materialize, kpis(readings)),
+            "alerts": feed,
+            "severity": derived(feed, alerts.severity_rollup),
+            "location_stats": submit(_materialize, location_stats(readings)),
+            "describe": submit(_materialize, temperature_describe(readings)),
+            "histogram": submit(_materialize, temperature_histogram(readings)),
+            "correlations": submit(_materialize, metric_correlations(readings)),
+            "trend": submit(_materialize, trend_series(readings)),
+            "trend_dense": submit(_materialize, trend_series_dense(readings)),
+            "forecasts": fits,
+            "model_quality": derived(fits, regression.quality_gate),
+            "geo": submit(_materialize, geo_map(readings, location_dim)),
+        }
+        return {name: panel.result() for name, panel in panels.items()}

@@ -2,10 +2,13 @@
 ``streamlit_dashboard.py:209-297``).
 
 The reference builds four Python lists by scanning the frame once per
-rule.  Here each rule is a declarative filter over the same scan and the
-union is a zero-shuffle `unionByName`; Catalyst collapses the shared scan,
-so the whole alert engine is one pass over the data regardless of rule
-count.
+rule.  Here each rule is a declarative filter and the union is a
+zero-shuffle `unionByName`.  Catalyst does not merge the union's
+branches, so the executed plan still scans the input once per rule: the
+dashboard's alert feed (three rules plus the IQR branch, whose fences
+take a scan of their own) reads every window row five times.  Give it a
+materialized input when the input is expensive to produce, as
+``dashboard.full_dashboard`` does with its local checkpoint.
 """
 
 from __future__ import annotations

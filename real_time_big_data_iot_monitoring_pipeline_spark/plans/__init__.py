@@ -225,6 +225,10 @@ ROUND12_OLDEST_COHORT: tuple[str, ...] = (
 # within it can shift as round-12 commits touch engine files — the
 # close stamp re-derives and re-pins exact order).
 ROUND13_OLDEST_COHORT: tuple[str, ...] = (
+    "filter_equality",
+    "alerts_threshold",
+    "severity_rollup",
+    "embedding_kmeans_clusters",
     "dedup_minhash_incremental",
     "embedding_neardups_lsh_checked",
     "text_pii_scrub",
@@ -294,7 +298,6 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "naive_bayes_lang_classifier",
     "dedup_components_incremental",
     "embedding_cosine_neardups",
-    "embedding_kmeans_clusters",
     "multimodal_decode",
     "multimodal_frame_sample",
     "multimodal_resize",
@@ -320,9 +323,6 @@ ROUND13_OLDEST_COHORT: tuple[str, ...] = (
     "pyds_sink_schema_evolution",
     "pyds_sink_stats_pruning",
     "pyds_sink_time_travel",
-    "pyds_sink_vacuum",
-    "pyds_sink_write_audit_publish",
-    "pyds_stream_counts",
 )
 
 # Rotating sf0.1 EXECUTION cohort (round-11 verdict item 3).  The CUPED

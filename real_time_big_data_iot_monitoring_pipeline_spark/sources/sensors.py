@@ -85,8 +85,10 @@ def readings(spark: SparkSession, hours: int = 24, start_epoch: int = EPOCH_STAR
 
 def location_dim(spark: SparkSession) -> DataFrame:
     """The location -> coordinates dimension table (reference
-    ``streamlit_dashboard.py:746-757``), for broadcast joins."""
-    return spark.createDataFrame(
-        [(name, lat, lon) for name, _, lat, lon in LOCATIONS],
-        ["location", "lat", "lon"],
-    )
+    ``streamlit_dashboard.py:746-757``), for broadcast joins.
+
+    A ``VALUES`` list, so the plan is a JVM-local relation: joining it
+    starts no Python worker (``createDataFrame`` of a Python list would
+    plan a Python RDD)."""
+    rows = ", ".join(f"('{name}', {lat!r}D, {lon!r}D)" for name, _, lat, lon in LOCATIONS)
+    return spark.sql(f"VALUES {rows} AS t(location, lat, lon)")

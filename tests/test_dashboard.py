@@ -78,31 +78,81 @@ def _checkpoint_rdd_ids(df) -> set[int]:
 
 
 def test_whole_surface_is_single_scan(spark, readings):
-    """Building the dashboard submits exactly the jobs of one local
-    checkpoint of its input, and executing all 12 panels afterwards never
-    scans the input relation again: every panel reads the checkpoint."""
+    """Building the dashboard submits the jobs of one local checkpoint of
+    its input plus each panel's own materialization, all under the
+    caller's job group (the panel threads inherit it); every returned
+    panel is a checkpoint, and executing it afterwards submits exactly one
+    job that reads only that checkpoint, never the input relation."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     readings.count()  # fill the fixture's cache outside the counted jobs
     try:
         sc.setJobGroup("dashboard-test-checkpoint", "reference checkpoint")
         readings.localCheckpoint(eager=True)
+        ungrouped = set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup("dashboard-test-build", "full_dashboard build")
         panels = dashboard.full_dashboard(readings, sensors.location_dim(spark))
+        assert set(tracker.getJobIdsForGroup(None)) == ungrouped, "a panel job lost the job group"
+        reference = tracker.getJobIdsForGroup("dashboard-test-checkpoint")
+        built = tracker.getJobIdsForGroup("dashboard-test-build")
+        assert len(panels) == 12
+        assert len(reference) >= 1
+        assert len(built) >= len(reference) + 12
+        for name, df in panels.items():
+            assert df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD", name
+            sc.setJobGroup(f"dashboard-test-run-{name}", f"execute {name}")
+            df.collect()
+            assert len(tracker.getJobIdsForGroup(f"dashboard-test-run-{name}")) == 1, name
+            leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+            assert {leaves.apply(i).nodeName() for i in range(leaves.size())} == {
+                "Scan ExistingRDD"
+            }, f"panel {name} reads more than its checkpoint"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    reference = tracker.getJobIdsForGroup("dashboard-test-checkpoint")
-    built = tracker.getJobIdsForGroup("dashboard-test-build")
-    assert len(built) == len(reference) >= 1
-    assert len(panels) == 12
+
+
+def test_failing_panel_fails_alone(spark, readings, monkeypatch):
+    """A panel whose plan raises at run time is returned as that lazy
+    plan and raises when executed; the dashboard still returns all 12
+    panels and the other 11 are exactly what they are without the
+    fault."""
+    from perfbench.dashboard_refresh import digest
+
+    dim = sensors.location_dim(spark)
+    healthy = {name: digest(df) for name, df in dashboard.full_dashboard(readings, dim).items()}
+    monkeypatch.setattr(
+        dashboard,
+        "temperature_histogram",
+        lambda df, nbins=30: df.select(
+            F.raise_error(F.concat(F.lit("bad panel at "), F.col("sensor_id"))).alias("bin")
+        ),
+    )
+    panels = dashboard.full_dashboard(readings, dim)
+    assert list(panels) == list(healthy)
     for name, df in panels.items():
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Scan ExistingRDD" in plan, name
-        assert "InMemoryTableScan" not in plan and "FileScan" not in plan, (
-            f"panel {name} re-scans the input:\n{plan}"
-        )
+        if name != "histogram":
+            assert digest(df) == healthy[name], name
+    with pytest.raises(Exception, match="bad panel at"):
+        panels["histogram"].collect()
+
+
+def test_location_dim_is_jvm_local(spark, readings):
+    """The location dimension is a local relation in the JVM with the
+    rows, names and types of the coordinate list, so the geo panel's join
+    plans no Python RDD and starts no Python worker."""
+    dim = sensors.location_dim(spark)
+    leaves = dim._jdf.queryExecution().analyzed().collectLeaves()
+    assert [leaves.apply(i).nodeName() for i in range(leaves.size())] == ["LocalRelation"]
+    assert dim.dtypes == [("location", "string"), ("lat", "double"), ("lon", "double")]
+    assert [tuple(r) for r in dim.collect()] == [
+        (name, lat, lon) for name, _, lat, lon in sensors.LOCATIONS
+    ]
+    geo = dashboard.geo_map(readings, dim)
+    geo.collect()
+    plan = geo._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
 
 
 def test_each_call_takes_a_fresh_checkpoint(spark, readings):
