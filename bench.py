@@ -272,8 +272,7 @@ def main() -> None:
         # Timed region = a fresh build() + the noop save: driver-side
         # plan compilation (tens of ms) rides along, identical for every
         # query and round-comparable; build_sec is stamped per query in
-        # BENCH_DETAIL so the split stays visible.  The old-methodology
-        # numbers are preserved in OPTIMIZATION_r13.md for the re-baseline.
+        # BENCH_DETAIL so the split stays visible.
         t0 = time.perf_counter()
         df = q.build(spark, sf_dir)
         build_secs[name] = round(time.perf_counter() - t0, 3)

@@ -185,10 +185,11 @@ def full_dashboard(readings: DataFrame, location_dim: DataFrame) -> dict[str, Da
     panel plans are built over it on the calling thread.  As soon as a
     plan is built, a thread of its own materializes it as an eager local
     checkpoint, so the panels' Spark jobs share the task slots instead
-    of queueing behind each other.  The threads inherit the
-    caller's job group and description, so the panel jobs are attributed
-    to the call that built them.  ``severity`` and ``model_quality`` are
-    derived from the materialized ``alerts`` and ``forecasts``, so the
+    of queueing behind each other.  The threads inherit the caller's job
+    group, and each sets the job description to the caller's description
+    plus ``:<panel>``, so the panel jobs are attributed to the call and the
+    panel that built them.  ``severity`` and ``model_quality`` are derived
+    from the materialized ``alerts`` and ``forecasts``, so the
     alert feed and the per-location fits run once per call.  A panel
     whose materialization raises is returned as its lazy plan and fails
     only when executed; the other panels are unaffected.
@@ -205,30 +206,36 @@ def full_dashboard(readings: DataFrame, location_dim: DataFrame) -> dict[str, Da
     session = readings.sparkSession
     with ThreadPoolExecutor(max_workers=12) as pool:  # one thread per panel
 
-        def submit(target, *args):
+        def submit(panel, target, *args):
             # wrapped per task, so each task gets its own copy of the
             # caller's local properties (its SQL executions set and clear
-            # one of them)
-            return pool.submit(inheritable_thread_target(session)(target), *args)
+            # one of them), then names its jobs "<caller description>:<panel>"
+            def run():
+                sc = session.sparkContext
+                caller = sc.getLocalProperty("spark.job.description")
+                sc.setJobDescription(f"{caller}:{panel}" if caller else panel)
+                return target(*args)
 
-        def derived(source, derive):
+            return pool.submit(inheritable_thread_target(session)(run))
+
+        def derived(panel, source, derive):
             # submitted after ``source``, so it never waits on a queued task
-            return submit(lambda: _materialize(derive(source.result())))
+            return submit(panel, lambda: _materialize(derive(source.result())))
 
-        feed = submit(_materialize, alert_feed(readings))
-        fits = submit(_materialize, forecasts(readings))
+        feed = submit("alerts", _materialize, alert_feed(readings))
+        fits = submit("forecasts", _materialize, forecasts(readings))
         panels = {
-            "kpis": submit(_materialize, kpis(readings)),
+            "kpis": submit("kpis", _materialize, kpis(readings)),
             "alerts": feed,
-            "severity": derived(feed, alerts.severity_rollup),
-            "location_stats": submit(_materialize, location_stats(readings)),
-            "describe": submit(_materialize, temperature_describe(readings)),
-            "histogram": submit(_materialize, temperature_histogram(readings)),
-            "correlations": submit(_materialize, metric_correlations(readings)),
-            "trend": submit(_materialize, trend_series(readings)),
-            "trend_dense": submit(_materialize, trend_series_dense(readings)),
+            "severity": derived("severity", feed, alerts.severity_rollup),
+            "location_stats": submit("location_stats", _materialize, location_stats(readings)),
+            "describe": submit("describe", _materialize, temperature_describe(readings)),
+            "histogram": submit("histogram", _materialize, temperature_histogram(readings)),
+            "correlations": submit("correlations", _materialize, metric_correlations(readings)),
+            "trend": submit("trend", _materialize, trend_series(readings)),
+            "trend_dense": submit("trend_dense", _materialize, trend_series_dense(readings)),
             "forecasts": fits,
-            "model_quality": derived(fits, regression.quality_gate),
-            "geo": submit(_materialize, geo_map(readings, location_dim)),
+            "model_quality": derived("model_quality", fits, regression.quality_gate),
+            "geo": submit("geo", _materialize, geo_map(readings, location_dim)),
         }
         return {name: panel.result() for name, panel in panels.items()}

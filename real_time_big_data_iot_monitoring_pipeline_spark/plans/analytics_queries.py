@@ -1796,10 +1796,16 @@ def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 100 TB.  An F.broadcast hint alone measured WORSE (3.02 ->
     # 3.22: the broadcast build serializes the rank subtree as its own
     # job) — recorded so round 14 doesn't re-try it.
+    x_cap = 1000  # l_quantity takes 50 values; the limit bounds the collect on any input
     gx = sorted(
         (r["x"], r["t"])
-        for r in base.groupBy("x").agg(F.count(F.lit(1)).alias("t")).collect()
+        for r in base.groupBy("x").agg(F.count(F.lit(1)).alias("t")).limit(x_cap + 1).collect()
     )
+    if len(gx) > x_cap:
+        raise ValueError(
+            "spearman_qty_price collects the distinct l_quantity values to the driver, "
+            f"capped at {x_cap}; this input has more"
+        )
     n = sum(t for _, t in gx)
     run, rx_rows, sxx = 0, [], 0
     for xv, t in gx:

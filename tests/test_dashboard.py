@@ -82,9 +82,11 @@ def test_whole_surface_is_single_scan(spark, readings):
     its input plus each panel's own materialization, all under the
     caller's job group (the panel threads inherit it); every returned
     panel is a checkpoint, and executing it afterwards submits exactly one
-    job that reads only that checkpoint, never the input relation."""
+    job that reads only that checkpoint, never the input relation.  Each
+    panel's materialization jobs are described "<caller description>:<panel>"."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
     readings.count()  # fill the fixture's cache outside the counted jobs
     try:
         sc.setJobGroup("dashboard-test-checkpoint", "reference checkpoint")
@@ -98,6 +100,10 @@ def test_whole_surface_is_single_scan(spark, readings):
         assert len(panels) == 12
         assert len(reference) >= 1
         assert len(built) >= len(reference) + 12
+        descriptions = {store.job(j).description().getOrElse(None) for j in built}
+        assert descriptions == {"full_dashboard build"} | {
+            f"full_dashboard build:{name}" for name in panels
+        }
         for name, df in panels.items():
             assert df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD", name
             sc.setJobGroup(f"dashboard-test-run-{name}", f"execute {name}")

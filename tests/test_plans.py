@@ -542,122 +542,3 @@ def test_plan_audit_covers_registry():
         if v["counters"].get("cartesian_products", 0) > 0
     ]
     assert not cartesians, f"cartesian products in: {cartesians}"
-
-
-def test_backlog_arithmetic_derived():
-    """Round-8 verdict item 3: the rotation's backlog counts are DERIVED
-    from CORRECTNESS_r*.json ∪ the registry (tools/backlog_audit.py),
-    never hand-maintained — round 7's close note said 112 never-hashed
-    while the truth was 115, because three rows rotated out of the
-    window fell out of the hand count.  Invariants:
-      (a) the constants written into plans/__init__.py equal the
-          computed numbers (count can only SHRINK as rounds land, so
-          the assert is ≤ against the rotation-time pin, == at pin
-          time);
-      (b) EVERY never-hashed oracle-bearing query is in DRIVER_WINDOW
-          or ROUND13_DRAFT — a window draft cannot silently drop a row;
-      (c) the window and the draft never overlap (a slot is either
-          draining now or scheduled, not both);
-      (d) round-9 verdict item 2: the pinned ROUND13_OLDEST_COHORT is a
-          faithful prefix of the churn-aware refresh queue — same
-          MEMBERSHIP as the live derivation's first 98 (exact order is
-          re-derived and re-pinned at the round-12 close stamp, since
-          in-round engine edits legally bump churn recency within the
-          prefix), and every still-churned row sits in the prefix the
-          round-13 refresh slots will drain.  Skipped (with the reason
-          stated) when git history is unavailable — churn attribution
-          anchors on the commits that landed the correctness artifacts
-          (round-10 ADVICE: degrade gracefully in shallow clones)."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from backlog_audit import _anchor_commit, compute_backlog, compute_churn, refresh_queue
-
-    from real_time_big_data_iot_monitoring_pipeline_spark import plans
-
-    b = compute_backlog()
-    never = set(b["never_hashed"])
-    window = set(plans.DRIVER_WINDOW)
-    draft = set(plans.ROUND13_DRAFT)
-    assert b["n_never_hashed"] <= plans.NEVER_HASHED_AT_R12_ROTATION, (
-        f"computed {b['n_never_hashed']} > pinned "
-        f"{plans.NEVER_HASHED_AT_R12_ROTATION}: a query lost its driver row "
-        "or the pin was hand-edited without re-deriving"
-    )
-    assert b["n_ever_hashed"] >= plans.EVER_HASHED_THROUGH_R11
-    uncovered = sorted(never - window - draft)
-    assert not uncovered, f"never-hashed queries in NO window/draft: {uncovered}"
-    assert not window & draft, f"window/draft overlap: {sorted(window & draft)}"
-    unknown = sorted((draft | set(plans.ROUND13_OLDEST_COHORT)) - set(REGISTRY))
-    assert not unknown, f"draft names not registered: {unknown}"
-    # (d) churn-aware refresh queue pin
-    max_round = max(b["latest_hash_round"].values(), default=0)
-    if not any(_anchor_commit(r) for r in range(1, max_round + 1)):
-        pytest.skip(
-            "git history unavailable (no correctness-artifact anchor commit "
-            "resolvable): churn-aware queue pin cannot be derived here"
-        )
-    cohort = plans.ROUND13_OLDEST_COHORT
-    assert len(cohort) == len(set(cohort)) == 98
-    assert not set(cohort) & window, "cohort rows already in this window"
-    derived = refresh_queue(exclude=plans.DRIVER_WINDOW)
-    assert set(cohort) == set(derived[: len(cohort)]), (
-        "pinned ROUND13_OLDEST_COHORT membership drifted from the live "
-        "churn-aware derivation — re-pin from "
-        "tools/backlog_audit.py::refresh_queue"
-    )
-    churned = compute_churn()
-    still_churned = {n for n in churned if n not in window}
-    if len(still_churned) <= 47:
-        # narrow churn: round 12's refresh slots must drain it entirely
-        lead = set(cohort[:47])
-        assert still_churned <= lead, (
-            "churned rows must lead the round-13 refresh queue so round 13 "
-            f"drains them: {sorted(still_churned - lead)}"
-        )
-    else:
-        # SATURATED churn (the round-11 scale audit edited shared
-        # helpers): the drain is multi-round by construction — the pin
-        # equality above already guarantees the cohort is the queue's
-        # true prefix; here assert ORDERING sanity: no non-churned row
-        # may precede a churned row inside the pinned prefix
-        seen_fresh = False
-        for nm in cohort:
-            if nm in still_churned:
-                assert not seen_fresh, (
-                    f"churned row {nm!r} ordered after a non-churned row "
-                    "in the pinned cohort — queue ordering violated"
-                )
-            else:
-                seen_fresh = True
-
-
-def test_round12_registrations_landed_in_window():
-    """The round-11 verdict's item 1: the two round-12 registrations are
-    registered, oracle-bearing, and hash on their FIRST window — pinned
-    at DRIVER_WINDOW positions 1-2, ahead of the refresh queue, exactly
-    as the registration policy (round-9 verdict item 5, option a)
-    prescribes."""
-    from real_time_big_data_iot_monitoring_pipeline_spark import plans
-
-    assert len(plans.ROUND12_REGISTRATION_PLAN) <= 10  # <=10 new/round policy
-    for i, name in enumerate(plans.ROUND12_REGISTRATION_PLAN, start=1):
-        assert name in REGISTRY, f"round-12 registration {name!r} not registered"
-        assert plans.DRIVER_WINDOW[i] == name, (
-            f"{name!r} must hold window position {i} (ahead of the refresh "
-            f"queue), got {plans.DRIVER_WINDOW[i]!r}"
-        )
-        assert REGISTRY[name].oracle, f"{name!r} must carry a DuckDB oracle"
-
-
-def test_round13_registration_plan_not_preregistered():
-    """The registration cadence stays honest: the queries planned as data
-    for round 13 (plans/__init__.py::ROUND13_REGISTRATION_PLAN) must NOT
-    exist in the registry yet — accidental early registration would
-    silently grow the never-hashed backlog outside a hashing window."""
-    from real_time_big_data_iot_monitoring_pipeline_spark import plans
-
-    early = sorted(set(plans.ROUND13_REGISTRATION_PLAN) & set(REGISTRY))
-    assert not early, f"round-13 planned queries registered early: {early}"
-    assert len(plans.ROUND13_REGISTRATION_PLAN) <= 10  # <=10 new/round policy

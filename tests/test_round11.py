@@ -19,8 +19,7 @@ format (sources/pydatasource.py), each fixed this round.
 
 (The other two round-10 ADVICE findings were test/tool hygiene: the
 test_plans cohort failure message now reports the same set it asserts,
-and backlog_audit's _changed_since_round delegates to _anchor_commit
-and degrades to None without git history.)
+and backlog_audit degrades to None without git history.)
 """
 
 from __future__ import annotations

@@ -141,34 +141,52 @@ def test_overflow_audit_flags_new_product_in_whitelisted_function():
 # --- 1: churn attribution closes over same-file def references transitively --
 
 
-def test_churn_sibling_closure_is_transitive():
+def test_churn_sibling_closure_is_transitive(tmp_path):
     """The binding-level churn exemption requires the bound def AND every
     same-file def TRANSITIVELY reachable from it to be unchanged: a
-    helper calling a changed sibling-of-sibling must churn.  Exercised
-    through the same fixed-point the tool runs, on synthetic def maps."""
-    import re as _re
+    helper calling a changed sibling-of-sibling must churn.  Through the
+    entry point on a two-commit history, an edited builder, a builder whose
+    decorator (where a query's oracle SQL lives) was edited and a new
+    builder are changed; an unchanged sibling builder in the same file is
+    not."""
+    import importlib.util
+    import os
+    import subprocess
+    import sys
 
-    # the tool's closure, extracted verbatim shape: reachable set from
-    # `binding` over \b-name references in def bodies
-    def closure(binding, old_defs, new_defs):
-        all_defs = set(old_defs) | set(new_defs)
-        reach = {binding}
-        frontier = [binding]
-        while frontier:
-            body = new_defs.get((d := frontier.pop()), old_defs.get(d, ""))
-            for s in all_defs - reach:
-                if _re.search(rf"\b{_re.escape(s)}\b", body):
-                    reach.add(s)
-                    frontier.append(s)
-        return reach
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import backlog_audit as BA
 
     old = {"a": "def a(): return b()", "b": "def b(): return c()", "c": "def c(): return 1"}
     new = {"a": "def a(): return b()", "b": "def b(): return c()", "c": "def c(): return 2"}
     # depth-1 would see only {a, b} (both unchanged) and exempt; the
     # transitive closure reaches c, whose change must churn a's users
-    reach = closure("a", old, new)
-    assert reach == {"a", "b", "c"}
-    assert not all(old.get(d) == new.get(d) for d in reach)
+    assert BA._same_file_reach("a", old, new) == {"a", "b", "c"}
+
+    def git(*args):
+        subprocess.run(["git", "-C", str(tmp_path), *args], check=True, capture_output=True)
+
+    src = tmp_path / "q.py"
+    src.write_text(
+        "def edited(spark, sf_dir):\n    return 1\n\n\ndef sibling(spark, sf_dir):\n    return 2\n"
+        "\n\ndef tag(sql):\n    return lambda f: f\n"
+        '\n\n@tag("SELECT 1")\ndef oracle_edited(spark, sf_dir):\n    return 5\n'
+    )
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
+    git("init", "-q")
+    git("add", "-A")
+    git("-c", "user.name=t", "-c", "user.email=t@t", "commit", "-q", "-m", "verified")
+    edited = src.read_text().replace("return 1", "return 3").replace("SELECT 1", "SELECT 2")
+    src.write_text(edited + "\n\ndef added(spark, sf_dir):\n    return 4\n")
+    spec = importlib.util.spec_from_file_location("churn_fixture_q", src)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    builders = {n: getattr(mod, n) for n in ("edited", "sibling", "oracle_edited", "added")}
+    assert BA.changed_queries(str(tmp_path), builders) == {
+        "added": ["builder"],
+        "edited": ["builder"],
+        "oracle_edited": ["builder"],
+    }
 
 
 # --- 5: bench compact line gates envelope_within on `applies` ----------------
@@ -185,60 +203,10 @@ def test_bench_compact_line_gates_envelope_on_applies():
     assert 'envelope["within"] if envelope["applies"] else None' in src
 
 
-# --- round-11 verdict #2: the close note's churn claim is mechanical ---------
-
-
-def test_perf_churn_stamp_matches_derivation():
-    """PERF.md's CHURN_STAMP line is tool-written (tools/close_stamp.py)
-    and must equal a fresh derivation on the current tree: a commit that
-    changes churn after the stamp fails here until the stamp is re-run
-    — the round-11 failure mode (close note said 55, final tree derived
-    265) made structurally impossible.  Skipped when git history is
-    unavailable (churn attribution anchors on the correctness-artifact
-    commits), same degradation as the cohort pin."""
-    import json
-    import os
-    import re
-    import sys
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    sys.path.insert(0, os.path.join(root, "tools"))
-    from backlog_audit import _anchor_commit, compute_backlog
-    from close_stamp import derive
-
-    b = compute_backlog()
-    max_round = max(b["latest_hash_round"].values(), default=0)
-    if not any(_anchor_commit(r) for r in range(1, max_round + 1)):
-        pytest.skip("git history unavailable: churn derivation not anchorable")
-
-    src = open(os.path.join(root, "PERF.md")).read()
-    m = re.search(r"^CHURN_STAMP: (.*)$", src, flags=re.M)
-    assert m, "PERF.md lacks a CHURN_STAMP line — run tools/close_stamp.py --write"
-    recorded = json.loads(m.group(1))
-    derived = derive()
-    assert recorded == derived, (
-        f"PERF.md churn stamp is stale (recorded {recorded} != derived "
-        f"{derived}): re-run `python tools/close_stamp.py --write`"
-    )
-
-
-# --- round-11 verdict #3: rotating sf0.1 EXECUTION + oracle cohort -----------
+# --- the sf0.1 execution leg --------------------------------------------------
 
 
 _SF01_DIR = "/root/testdata/sf0.1"
-
-
-def test_sf01_cohort_pin_matches_derivation():
-    """The pinned sf0.1 cohort equals the mechanical derivation (all
-    oracle-bearing names sorted, chunk (round-12) mod nchunks) — a
-    registry change at rotation time re-pins loudly instead of silently
-    shifting chunk boundaries."""
-    from real_time_big_data_iot_monitoring_pipeline_spark import plans
-
-    assert plans.SF01_EXECUTION_COHORT == plans.sf01_rotation_chunk(
-        plans.SF01_EXECUTION_ROUND
-    )
-    assert len(plans.SF01_EXECUTION_COHORT) == plans.SF01_EXECUTION_CHUNK_SIZE
 
 
 @pytest.fixture(scope="module")
@@ -256,19 +224,19 @@ def oracle_sf01():
 
 
 def _sf01_cohort():
-    from real_time_big_data_iot_monitoring_pipeline_spark import plans
+    from real_time_big_data_iot_monitoring_pipeline_spark.plans import REGISTRY
 
-    return plans.SF01_EXECUTION_COHORT
+    return sorted(n for n, q in REGISTRY.items() if q.oracle is not None)[:40]
 
 
 @pytest.mark.slow  # round-13: 40 queries EXECUTED at sf0.1 — close-gate leg
 @pytest.mark.parametrize("name", _sf01_cohort())
 def test_sf01_execution_cohort_oracle_match(name, spark, oracle_sf01):
-    """EXECUTE the rotating cohort at sf0.1 (10x the driver's gate
-    scale) and compare against DuckDB on the same sf0.1 fixtures — the
-    standing form of the sweep that caught the CUPED overflow: a query
-    green at every smaller scale but wrong-or-crashing at sf0.1 fails
-    here.  Full catalog coverage every ~10 rounds."""
+    """EXECUTE the first 40 oracle queries by name at sf0.1 (10x the
+    driver's gate scale) and compare against DuckDB on the same sf0.1
+    fixtures — the standing form of the sweep that caught the CUPED
+    overflow: a query green at every smaller scale but wrong-or-crashing
+    at sf0.1 fails here."""
     import os
 
     if not os.path.isdir(_SF01_DIR):

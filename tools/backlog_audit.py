@@ -1,23 +1,24 @@
 #!/usr/bin/env python
-"""Driver-hash backlog audit (round-8 verdict item 3): derive the
-never-hashed count from CORRECTNESS_r*.json ∪ the registry instead of
-hand-maintained comments, so window drafts can't silently drop queries
-(the round-7 close note said 112 while the judge-computed truth was 115
-— the three queries rotated out to admit round-7 registrations fell out
-of the hand count).
+"""Which catalog queries changed since the last tree the driver verified.
 
-Definitions (the judge's):
-  * ever-hashed  = a query name appearing in ANY CORRECTNESS_r*.json
-    with hash_match=true (oracle-bearing) or rows_match=true (weaker
-    rows-only check for non-SQL-expressible ops);
-  * oracle-bearing = registry entries with a non-None oracle;
-  * never-hashed = oracle-bearing − ever-hashed.
+The anchor is the commit that added the newest CORRECTNESS_r*.json.  A
+query is *changed* when, between the anchor and the working tree:
+  (a) its builder's own top-level def changed, its @register decorator
+      and oracle SQL included (a builder absent at the anchor counts as
+      changed),
+  (b) a top-level def in the builder's file that the builder names
+      changed ("helper:<name>"), or
+  (c) the builder names an imported package binding whose file's
+      package-internal import closure contains a changed file (the
+      reason is the bound file).  When the binding is a def of the bound
+      file, that file is the only changed one and its non-def code is
+      unchanged, only the def and the same-file defs it reaches
+      transitively by name count.
 
-Run:  python tools/backlog_audit.py          # human summary
-      python tools/backlog_audit.py --names  # + the full name lists
-The unit test tests/test_plans.py::test_backlog_arithmetic_derived
-asserts the policy constants in plans/__init__.py against
-compute_backlog().
+tests/test_oracle_parity.py runs every changed oracle query outside
+DRIVER_WINDOW in the default suite.
+
+Run:  python tools/backlog_audit.py   # the changed queries with reasons
 """
 
 from __future__ import annotations
@@ -25,8 +26,8 @@ from __future__ import annotations
 import ast
 import glob
 import inspect
-import json
 import os
+import re
 import subprocess
 import sys
 
@@ -35,72 +36,6 @@ if REPO not in sys.path:  # `python tools/backlog_audit.py` puts tools/ first
     sys.path.insert(0, REPO)
 
 PKG = "real_time_big_data_iot_monitoring_pipeline_spark"
-
-
-def load_hashed(repo: str = REPO) -> dict[str, int]:
-    """name -> latest round with a GREEN driver row (hash_match, or
-    rows_match for rows-only checks)."""
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
-        try:
-            data = json.load(open(f))
-        except (json.JSONDecodeError, OSError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") or row.get("rows_match"):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def compute_backlog(repo: str = REPO) -> dict:
-    from real_time_big_data_iot_monitoring_pipeline_spark.plans import REGISTRY
-
-    hashed = load_hashed(repo)
-    oracle_bearing = sorted(n for n, q in REGISTRY.items() if getattr(q, "oracle", None))
-    rows_only = sorted(n for n, q in REGISTRY.items() if not getattr(q, "oracle", None))
-    ever = sorted(n for n in oracle_bearing if n in hashed)
-    never = sorted(n for n in oracle_bearing if n not in hashed)
-    return {
-        "n_registry": len(REGISTRY),
-        "n_oracle_bearing": len(oracle_bearing),
-        "n_rows_only": len(rows_only),
-        "n_ever_hashed": len(ever),
-        "n_never_hashed": len(never),
-        "never_hashed": never,
-        "rows_only": rows_only,
-        "latest_hash_round": hashed,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Churn-aware staleness (round-9 verdict item 2).  The age-based refresh
-# policy measures HASH age, not CODE churn: round 9 rewrote ~1,000 lines of
-# pkg/sources/pydatasource.py while every pyds_* row's last hard hash stayed
-# at d6-d8.  Here we derive, per query, whether any file implementing it
-# changed since the commit that landed its latest green driver hash; churned
-# rows jump the oldest-first queue at the next rotation
-# (plans/__init__.py::ROUND12_OLDEST_COHORT leads with them as pinned data).
-#
-# Attribution is FUNCTION-granular at the plans layer (the wide fan-out
-# point — a plans file holds dozens of unrelated builders) and
-# module-granular below it: a query churns iff
-#   (a) its builder's own top-level def changed (ast source segment at the
-#       anchor commit vs the working tree),
-#   (b) a top-level helper in the same plans module changed AND the builder's
-#       source references it by name, or
-#   (c) the builder's source uses an imported package binding whose file's
-#       transitive pkg-internal import closure intersects the files changed
-#       since the anchor (engine modules like sources/pydatasource.py fan in
-#       here — module granularity below plans/ is deliberate: engine edits
-#       can move behavior reached through any entry point).
-# Pure module granularity marked 212/356 rows churned after round 9 —
-# useless as a priority signal; this attribution keeps the set actionable.
-# Over-approximation still only costs refresh priority, never a skipped
-# refresh (age-ordering continues underneath).
-# ---------------------------------------------------------------------------
 
 
 def _module_rel_file(modname: str, repo: str = REPO) -> str | None:
@@ -146,47 +81,35 @@ def _git(repo: str, *args: str) -> str:
     ).stdout
 
 
-def _changed_since_round(rnd: int, repo: str = REPO) -> set[str] | None:
-    """Files changed (committed or working-tree) since CORRECTNESS_r{rnd}
-    landed; None when the anchor commit cannot be resolved (e.g. a shallow
-    clone with no history for the correctness artifacts)."""
-    anchor = _anchor_commit(rnd, repo)
-    if anchor is None:
-        return None
+def _def_lines(src: str) -> dict[str, range] | None:
+    """name -> 0-based line range of every top-level def/class in `src`,
+    decorators included (a query's @register carries its oracle SQL);
+    None when `src` does not parse."""
     try:
-        return set(_git(repo, "diff", "--name-only", anchor).split())
-    except (subprocess.CalledProcessError, OSError):
+        tree = ast.parse(src)
+    except SyntaxError:
         return None
+    return {
+        node.name: range((node.decorator_list or [node])[0].lineno - 1, node.end_lineno)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    }
 
 
 def _non_def_residue(src: str) -> str:
     """The module source with every top-level def/class segment removed —
-    the imports/constants a helper def could close over.  Compared at the
-    anchor vs the worktree to decide whether binding-level churn
-    granularity is sound for a file (see compute_churn)."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
+    the imports/constants a def could close over."""
+    spans = _def_lines(src)
+    if spans is None:
         return src
-    lines = src.splitlines()
-    drop: set[int] = set()
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            drop.update(range(node.lineno - 1, (node.end_lineno or node.lineno)))
-    return "\n".join(l for i, l in enumerate(lines) if i not in drop)
+    drop = set().union(*spans.values())
+    return "\n".join(l for i, l in enumerate(src.splitlines()) if i not in drop)
 
 
 def _top_level_defs(src: str) -> dict[str, str]:
     """name -> source segment for every top-level def/class in `src`."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return {}
-    out: dict[str, str] = {}
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            out[node.name] = ast.get_source_segment(src, node) or ""
-    return out
+    lines = src.splitlines()
+    return {name: "\n".join(lines[r.start : r.stop]) for name, r in (_def_lines(src) or {}).items()}
 
 
 def _file_at(rel: str, commit: str | None, repo: str = REPO) -> str:
@@ -236,189 +159,111 @@ def _anchor_commit(rnd: int, repo: str = REPO) -> str | None:
         return None
 
 
-def compute_churn(repo: str = REPO) -> dict:
-    """name -> {last_round, churn_round, reasons} for every ever-hashed
-    registry query whose implementation changed since the commit that landed
-    its latest green driver hash.  `reasons` entries: "builder" (own def
-    edited), "helper:<name>" (referenced module-local def edited), or a
-    repo-relative engine file whose import closure changed.  `churn_round`
-    is the round DURING which the most recent implicated change landed
-    (higher = fresher unvalidated code = higher refresh priority)."""
-    import re as _re
+def _names(name: str, src: str) -> bool:
+    return re.search(rf"\b{re.escape(name)}\b", src) is not None
 
-    from real_time_big_data_iot_monitoring_pipeline_spark.plans import REGISTRY
 
-    hashed = load_hashed(repo)
-    max_round = max(hashed.values(), default=0)
-    anchors = {r: _anchor_commit(r, repo) for r in range(1, max_round + 1)}
-    changed_by_round = {r: _changed_since_round(r, repo) for r in anchors}
+def _same_file_reach(binding: str, old_defs: dict[str, str], new_defs: dict[str, str]) -> set[str]:
+    """`binding` plus every def of the same file reachable from it by name,
+    transitively (a helper calling a changed sibling-of-sibling counts)."""
+    all_defs = set(old_defs) | set(new_defs)
+    reach = {binding}
+    frontier = [binding]
+    while frontier:
+        body = new_defs.get((d := frontier.pop()), old_defs.get(d, ""))
+        for s in all_defs - reach:
+            if _names(s, body):
+                reach.add(s)
+                frontier.append(s)
+    return reach
 
-    def last_changed_round(path: str) -> int:
-        """Round during which `path` most recently changed: 1 + the highest
-        correctness anchor whose diff-to-worktree still contains it (the
-        current, in-flight round is max_round + 1)."""
-        best = 0
-        for r, files in changed_by_round.items():
-            if files is not None and path in files:
-                best = max(best, r + 1)
-        return best
+
+def changed_queries(repo: str = REPO, builders: dict | None = None) -> dict[str, list[str]] | None:
+    """name -> sorted reasons for every query in `builders` (name -> build
+    function; default the whole registry) whose implementation changed
+    since the anchor.  Reasons: "builder", "helper:<def>", or a bound
+    repo-relative file.  None when the anchor cannot be resolved (no git
+    history)."""
+    if builders is None:
+        from real_time_big_data_iot_monitoring_pipeline_spark.plans import REGISTRY
+
+        builders = {n: q.build for n, q in REGISTRY.items()}
+    rounds = [
+        int(re.search(r"_r(\d+)\.json$", f).group(1))
+        for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
+    ]
+    anchor = _anchor_commit(max(rounds), repo) if rounds else None
+    if anchor is None:
+        return None
+    # committed and working-tree edits, plus files git does not track yet
+    changed = set(_git(repo, "diff", "--name-only", anchor).split())
+    changed |= set(_git(repo, "ls-files", "--others", "--exclude-standard").split())
+
     closure_memo: dict = {}
     defs_cache: dict[tuple[str, str | None], dict[str, str]] = {}
     bindings_cache: dict[str, dict[str, str]] = {}
 
     def defs(rel: str, commit: str | None) -> dict[str, str]:
-        key = (rel, commit)
-        if key not in defs_cache:
-            defs_cache[key] = _top_level_defs(_file_at(rel, commit, repo))
-        return defs_cache[key]
+        if (rel, commit) not in defs_cache:
+            defs_cache[rel, commit] = _top_level_defs(_file_at(rel, commit, repo))
+        return defs_cache[rel, commit]
 
-    churned: dict[str, dict] = {}
-    for name, rnd in sorted(hashed.items()):
-        if name not in REGISTRY:
-            continue
-        changed = changed_by_round.get(rnd)
-        if changed is None:
-            continue
-        src_file = inspect.getsourcefile(REGISTRY[name].build)
+    def binding_unchanged(binding: str, dep_file: str) -> bool:
+        old, new = defs(dep_file, anchor), defs(dep_file, None)
+        if binding not in old and binding not in new:
+            return False  # a module binding: any change in the file counts
+        if _non_def_residue(_file_at(dep_file, anchor, repo)) != _non_def_residue(
+            _file_at(dep_file, None, repo)
+        ):
+            return False
+        return all(old.get(d) == new.get(d) for d in _same_file_reach(binding, old, new))
+
+    out: dict[str, list[str]] = {}
+    for name, build in sorted(builders.items()):
+        src_file = inspect.getsourcefile(build)
         if not src_file:
             continue
         rel = os.path.relpath(src_file, repo)
         try:
-            builder_src = inspect.getsource(REGISTRY[name].build)
+            builder_src = inspect.getsource(build)
         except (OSError, TypeError):
             builder_src = ""
-        reasons: list[str] = []
-        implicated: set[str] = set()
+        reasons: set[str] = set()
         if rel in changed:
-            old = defs(rel, anchors[rnd])
-            new = defs(rel, None)
-            bname = REGISTRY[name].build.__name__
+            old, new = defs(rel, anchor), defs(rel, None)
+            bname = build.__name__
             if old.get(bname) != new.get(bname):
-                reasons.append("builder")
-                implicated.add(rel)
+                reasons.add("builder")
             for dname, dsrc in new.items():
-                if dname != bname and old.get(dname) != dsrc and _re.search(
-                    rf"\b{_re.escape(dname)}\b", builder_src
-                ):
-                    reasons.append(f"helper:{dname}")
-                    implicated.add(rel)
+                if dname != bname and old.get(dname) != dsrc and _names(dname, builder_src):
+                    reasons.add(f"helper:{dname}")
         if rel not in bindings_cache:
             bindings_cache[rel] = _import_bindings(rel, repo)
         for binding, dep_file in sorted(bindings_cache[rel].items()):
-            if dep_file in reasons:
+            if dep_file in reasons or not _names(binding, builder_src):
                 continue
-            if _re.search(rf"\b{_re.escape(binding)}\b", builder_src):
-                hits = _dep_closure(dep_file, repo, closure_memo) & changed
-                if not hits:
-                    continue
-                # BINDING-level granularity (round-11): helper modules
-                # like functions/scalars.py are wide fan-out points just
-                # like the plans layer — a one-helper edit there used to
-                # churn every round_det user in the catalog (313/400
-                # after the scale audit), saturating the priority
-                # signal.  When the bound name is a top-level def of the
-                # DIRECTLY-bound file, that file is the only hit, and
-                # the file's non-def residue (imports/constants the def
-                # could close over) is unchanged, churn only if THAT
-                # def's source changed.  Module bindings, transitive
-                # hits, and residue changes keep the safe module-granular
-                # over-approximation.
-                if hits == {dep_file}:
-                    old_defs = defs(dep_file, anchors[rnd])
-                    new_defs = defs(dep_file, None)
-                    if (binding in old_defs or binding in new_defs) and _non_def_residue(
-                        _file_at(dep_file, anchors[rnd], repo)
-                    ) == _non_def_residue(_file_at(dep_file, None, repo)):
-                        # the bound def AND every same-file def reachable
-                        # from it by name must be unchanged (a helper
-                        # calling a changed sibling helper still churns).
-                        # TRANSITIVE closure, fixed-point over bodies
-                        # (round-11 ADVICE #1: the old depth-1 scan let a
-                        # sibling that itself calls a changed third
-                        # same-file def escape detection)
-                        all_defs = set(old_defs) | set(new_defs)
-                        reach = {binding}
-                        frontier = [binding]
-                        while frontier:
-                            body = new_defs.get(
-                                (d := frontier.pop()), old_defs.get(d, "")
-                            )
-                            for s in all_defs - reach:
-                                if _re.search(rf"\b{_re.escape(s)}\b", body):
-                                    reach.add(s)
-                                    frontier.append(s)
-                        if all(old_defs.get(d) == new_defs.get(d) for d in reach):
-                            continue
-                reasons.append(dep_file)
-                implicated |= hits
+            hits = _dep_closure(dep_file, repo, closure_memo) & changed
+            if not hits or (hits == {dep_file} and binding_unchanged(binding, dep_file)):
+                continue
+            reasons.add(dep_file)
         if reasons:
-            churned[name] = {
-                "last_round": rnd,
-                "churn_round": max((last_changed_round(f) for f in implicated), default=rnd + 1),
-                "reasons": sorted(set(reasons)),
-            }
-    return churned
-
-
-def refresh_queue(exclude: tuple[str, ...] = (), repo: str = REPO) -> list[str]:
-    """The round-11+ refresh priority order over every ever-hashed query not
-    in `exclude` (pass the current DRIVER_WINDOW):  churned rows first —
-    ordered by churn recency (most recent unvalidated change first), then
-    hash age, then name — followed by non-churned rows oldest-first.  The
-    rotation constants in plans/__init__.py pin a prefix of this queue as
-    data; tests/test_plans.py asserts the pin against this derivation."""
-    hashed = load_hashed(repo)
-    churned = compute_churn(repo)
-    rows = [n for n in hashed if n not in set(exclude)]
-    churn_first = sorted(
-        (n for n in rows if n in churned),
-        key=lambda n: (-churned[n]["churn_round"], hashed[n], n),
-    )
-    fresh = sorted((n for n in rows if n not in churned), key=lambda n: (hashed[n], n))
-    return churn_first + fresh
+            out[name] = sorted(reasons)
+    return out
 
 
 def main() -> None:
-    b = compute_backlog()
-    from real_time_big_data_iot_monitoring_pipeline_spark.plans import (
-        DRIVER_WINDOW,
-        ROUND13_DRAFT,
-    )
+    from real_time_big_data_iot_monitoring_pipeline_spark.plans import DRIVER_WINDOW, REGISTRY
 
-    drained = [n for n in b["never_hashed"] if n in DRIVER_WINDOW]
-    after = [n for n in b["never_hashed"] if n not in DRIVER_WINDOW]
-    uncovered = [n for n in after if n not in ROUND13_DRAFT]
-    print(
-        f"registry {b['n_registry']} | oracle-bearing {b['n_oracle_bearing']} "
-        f"| ever-hashed {b['n_ever_hashed']} | never-hashed {b['n_never_hashed']}"
-    )
-    print(
-        f"current DRIVER_WINDOW drains {len(drained)}; "
-        f"{len(after)} remain after this round; "
-        f"{len(uncovered)} NOT covered by the next draft"
-    )
-    ages: dict[int, int] = {}
-    for n in b["latest_hash_round"].values():
-        ages[n] = ages.get(n, 0) + 1
-    print("last-hash round histogram:", dict(sorted(ages.items())))
-    if uncovered:
-        print("UNCOVERED (fix the draft):", uncovered)
-    churned = compute_churn()
-    waiting = sorted(n for n in churned if n not in DRIVER_WINDOW)
-    print(
-        f"churned since last hash: {len(churned)} "
-        f"({len(waiting)} NOT in the current window -> next rotation leads with them)"
-    )
-    if "--churn" in sys.argv or "--names" in sys.argv:
-        for n in sorted(churned):
-            marker = " <- this window" if n in DRIVER_WINDOW else ""
-            c = churned[n]
-            print(f"  {n} (last d{c['last_round']}): {', '.join(c['reasons'])}{marker}")
-    if "--names" in sys.argv:
-        print("\nnever-hashed:")
-        for n in b["never_hashed"]:
-            marker = "  <- this window" if n in DRIVER_WINDOW else ""
-            print(f"  {n}{marker}")
+    changed = changed_queries()
+    if changed is None:
+        sys.exit("no anchor: git history for CORRECTNESS_r*.json is unavailable")
+    print(f"{len(changed)} changed queries since the last verified tree")
+    for name, reasons in changed.items():
+        if name in DRIVER_WINDOW:
+            where = "window"
+        else:
+            where = "leg" if REGISTRY[name].oracle else "rows-only"
+        print(f"  {name} [{where}]: {', '.join(reasons)}")
 
 
 if __name__ == "__main__":
