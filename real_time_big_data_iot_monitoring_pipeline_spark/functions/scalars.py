@@ -165,21 +165,6 @@ def avg_fixed_sql(col: str, decimals: int = 2, out: int = 4) -> str:
     )
 
 
-def sum_fixed_sql(col: str, decimals: int = 2, out: int = 2) -> str:
-    scale = 10 ** decimals
-    return round_det_sql(f"sum(CAST(round({col} * {scale}, 0) AS BIGINT)) / {scale}.0", out)
-
-
-def std_fixed_sql(col: str, decimals: int = 2, out: int = 4) -> str:
-    scale = 10 ** decimals
-    c = f"CAST(round({col} * {scale}, 0) AS BIGINT)"
-    return round_det_sql(
-        f"sqrt((CAST(sum({c} * {c}) AS DOUBLE) - CAST(sum({c}) AS DOUBLE) * CAST(sum({c}) AS DOUBLE)"
-        f" / CAST(count({col}) AS DOUBLE)) / (CAST(count({col}) AS DOUBLE) - 1.0)) / {scale}.0",
-        out,
-    )
-
-
 def corr_int_sql(x: str, y: str, out: int = 4) -> str:
     n = "CAST(count(*) AS DOUBLE)"
     return round_det_sql(

@@ -121,20 +121,6 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def with_cosine(df: DataFrame, a_col: str, b_col: str, out: str = "cosine") -> DataFrame:
-    """Cosine of two double-array columns via the fast Arrow kernel; the
-    struct is materialized once per row, division stays JVM-side."""
-    return (
-        df.withColumn("_cp", cosine_parts(F.col(a_col), F.col(b_col)))
-        .withColumn(out, cosine_from_parts(F.col("_cp")))
-        .drop("_cp")
-    )
-
-
 def as_double_vec(df: DataFrame, col: str = "embedding") -> DataFrame:
     """Cast array<float> to array<double> so all engines do the arithmetic
     in the same precision."""

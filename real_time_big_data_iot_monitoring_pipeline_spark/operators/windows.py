@@ -38,25 +38,12 @@ def rolling_avg(
     return df.withColumn(out, round_det(mean, 4))
 
 
-def lag_diff(df: DataFrame, partition: str, order: list[str], col: str, out: str = "diff") -> DataFrame:
-    """First difference (reference ``streamlit_dashboard.py:689`` `.diff()`)."""
-    w = _win(partition, order)
-    return df.withColumn(out, round_det(F.col(col) - F.lag(col, 1).over(w), 4))
-
-
 def topn_per_group(df: DataFrame, partition: str, order_desc: list[str], n: int) -> DataFrame:
     """Latest-N rows per group (reference tail-N `.iloc[-20:]`,
     ``streamlit_dashboard.py:689``). row_number + filter: Spark pushes the
     rank limit into the sort within each partition."""
     w = Window.partitionBy(partition).orderBy(*[F.col(c).desc() for c in order_desc])
     return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= n)
-
-
-def last_per_group(df: DataFrame, key: str, value: str, order: str) -> DataFrame:
-    """Last value per group (reference current-temperature read,
-    ``streamlit_dashboard.py:719`` `.iloc[-1]`): `max_by` — a single hash
-    aggregation, cheaper than sort+row_number at scale."""
-    return df.groupBy(key).agg(F.expr(f"max_by({value}, {order})").alias(f"last_{value}"))
 
 
 def elapsed_seconds(df: DataFrame, partition: str, ts_col: str, out: str = "elapsed_s") -> DataFrame:

@@ -80,11 +80,3 @@ def get_session(
     ):
         spark.conf.set(k, ENGINE_CONF[k])
     return spark
-
-
-def ensure_engine_conf(spark: SparkSession) -> SparkSession:
-    """Assert the runtime-settable engine confs on an externally-built
-    session (the driver passes us its own SparkSession)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    return spark

@@ -50,28 +50,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def events_with_raw_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with BOTH `ts` (timestamp) and a raw `ts_ns` long.
-
-    On a TIMESTAMP(NANOS) fixture the raw long is the scan-native column,
-    so predicates against `ts_ns` push into the parquet scan while a
-    filter on the derived `ts` would not (Catalyst will not invert
-    `timestamp_micros(ts DIV 1000)`).  On the current TIMESTAMP(MICROS)
-    fixtures `ts` itself is scan-native — time predicates should be
-    written directly against `ts` (they push down as timestamp min/max
-    row-group skipping); `ts_ns` here is derived, provided only for
-    callers that want uniform nano arithmetic."""
-    df = load_table(spark, sf_dir, "events")
-    if "ts_ns" in df.columns:
-        return df
-    if dict(df.dtypes).get("ts") == "bigint":
-        return df.withColumnRenamed("ts", "ts_ns").withColumn(
-            "ts", F.timestamp_micros(F.expr("ts_ns DIV 1000"))
-        )
-    return df.withColumn("ts_ns", F.unix_micros(F.col("ts")) * 1000)

@@ -24,8 +24,8 @@ def plan_of(df, mode: str = "formatted") -> str:
 
 def test_time_filter_pushes_to_parquet(spark, sf_dir):
     """The time-range predicate must reach the scan as PushedFilters on
-    the raw ts_ns column — the engine's substitute for the reference's
-    B-tree index range scan."""
+    the scan-native ts column — the engine's substitute for the
+    reference's B-tree index range scan."""
     df = REGISTRY["filter_time_range"].build(spark, sf_dir)
     plan = plan_of(df)
     assert "PushedFilters" in plan

@@ -2,9 +2,9 @@
 
   1. (low) backlog_audit's binding-level churn check was depth-1: a
      sibling helper that itself calls a changed third same-file def
-     escaped detection.  Now a same-file TRANSITIVE closure
-     (fixed-point over bodies) decides churn — pinned here on a
-     synthetic module history shape.
+     escaped detection.  The tool now follows every name a query
+     reaches, transitively and across files; that attribution is
+     pinned in tests/test_oracle_parity.py, the leg it selects for.
   2. (low) overflow_audit's BOUNDED whitelist was keyed by
      (module, function), so a NEW unguarded F.sum(a*b) inside an
      already-whitelisted function passed silently.  Now keyed by
@@ -136,57 +136,6 @@ def test_overflow_audit_flags_new_product_in_whitelisted_function():
         assert list(ghost) in out["stale_whitelist"]
     finally:
         del OA.SPLIT_BOUNDED[ghost]
-
-
-# --- 1: churn attribution closes over same-file def references transitively --
-
-
-def test_churn_sibling_closure_is_transitive(tmp_path):
-    """The binding-level churn exemption requires the bound def AND every
-    same-file def TRANSITIVELY reachable from it to be unchanged: a
-    helper calling a changed sibling-of-sibling must churn.  Through the
-    entry point on a two-commit history, an edited builder, a builder whose
-    decorator (where a query's oracle SQL lives) was edited and a new
-    builder are changed; an unchanged sibling builder in the same file is
-    not."""
-    import importlib.util
-    import os
-    import subprocess
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import backlog_audit as BA
-
-    old = {"a": "def a(): return b()", "b": "def b(): return c()", "c": "def c(): return 1"}
-    new = {"a": "def a(): return b()", "b": "def b(): return c()", "c": "def c(): return 2"}
-    # depth-1 would see only {a, b} (both unchanged) and exempt; the
-    # transitive closure reaches c, whose change must churn a's users
-    assert BA._same_file_reach("a", old, new) == {"a", "b", "c"}
-
-    def git(*args):
-        subprocess.run(["git", "-C", str(tmp_path), *args], check=True, capture_output=True)
-
-    src = tmp_path / "q.py"
-    src.write_text(
-        "def edited(spark, sf_dir):\n    return 1\n\n\ndef sibling(spark, sf_dir):\n    return 2\n"
-        "\n\ndef tag(sql):\n    return lambda f: f\n"
-        '\n\n@tag("SELECT 1")\ndef oracle_edited(spark, sf_dir):\n    return 5\n'
-    )
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    git("init", "-q")
-    git("add", "-A")
-    git("-c", "user.name=t", "-c", "user.email=t@t", "commit", "-q", "-m", "verified")
-    edited = src.read_text().replace("return 1", "return 3").replace("SELECT 1", "SELECT 2")
-    src.write_text(edited + "\n\ndef added(spark, sf_dir):\n    return 4\n")
-    spec = importlib.util.spec_from_file_location("churn_fixture_q", src)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    builders = {n: getattr(mod, n) for n in ("edited", "sibling", "oracle_edited", "added")}
-    assert BA.changed_queries(str(tmp_path), builders) == {
-        "added": ["builder"],
-        "edited": ["builder"],
-        "oracle_edited": ["builder"],
-    }
 
 
 # --- 5: bench compact line gates envelope_within on `applies` ----------------

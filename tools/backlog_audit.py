@@ -2,18 +2,24 @@
 """Which catalog queries changed since the last tree the driver verified.
 
 The anchor is the commit that added the newest CORRECTNESS_r*.json.  A
-query is *changed* when, between the anchor and the working tree:
-  (a) its builder's own top-level def changed, its @register decorator
-      and oracle SQL included (a builder absent at the anchor counts as
-      changed),
-  (b) a top-level def in the builder's file that the builder names
-      changed ("helper:<name>"), or
-  (c) the builder names an imported package binding whose file's
-      package-internal import closure contains a changed file (the
-      reason is the bound file).  When the binding is a def of the bound
-      file, that file is the only changed one and its non-def code is
-      unchanged, only the def and the same-file defs it reaches
-      transitively by name count.
+file's *segments* are its top-level defs and classes (decorators, and so a
+query's oracle SQL, included) and its top-level assignments (module
+constants); everything else in the file is its *residue*.
+
+A query *reaches* its builder's segment and, from every segment it
+reaches, read from the AST (a docstring or comment mention is not a
+reference):
+  - each same-file segment whose name the code uses, or that a string
+    literal equal to its name looks up (`REGISTRY_LOOKUP("name")`);
+  - `dep.py:name` for each `from pkg.dep import name` binding it uses;
+  - `dep.py:attr` for each `mod.attr` on a module binding it uses.  A bare
+    use of a module binding, or a name the rule cannot resolve, reaches
+    every segment of the file.
+
+A query is *changed* when a segment it reaches differs from the anchor
+("builder", "helper:<name>" in the builder's file, "<file>:<name>"
+elsewhere) or when the residue of a file it reaches differs, blank lines
+aside ("<file>").  A builder absent at the anchor is changed.
 
 tests/test_oracle_parity.py runs every changed oracle query outside
 DRIVER_WINDOW in the default suite.
@@ -36,6 +42,7 @@ if REPO not in sys.path:  # `python tools/backlog_audit.py` puts tools/ first
     sys.path.insert(0, REPO)
 
 PKG = "real_time_big_data_iot_monitoring_pipeline_spark"
+WHOLE = "*"  # the node that reaches every segment of its file
 
 
 def _module_rel_file(modname: str, repo: str = REPO) -> str | None:
@@ -46,70 +53,10 @@ def _module_rel_file(modname: str, repo: str = REPO) -> str | None:
     return None
 
 
-def _direct_imports(rel: str, repo: str = REPO) -> set[str]:
-    """Package-internal files imported by `rel` (repo-relative paths)."""
-    try:
-        tree = ast.parse(open(os.path.join(repo, rel)).read())
-    except (OSError, SyntaxError):
-        return set()
-    mods: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            mods.update(a.name for a in node.names if a.name.startswith(PKG))
-        elif isinstance(node, ast.ImportFrom) and node.module and node.module.startswith(PKG):
-            mods.add(node.module)
-            # `from pkg.operators import dedup` names a submodule, not an attr
-            mods.update(f"{node.module}.{a.name}" for a in node.names)
-    return {f for m in mods if (f := _module_rel_file(m, repo))}
-
-
-def _dep_closure(rel: str, repo: str = REPO, _memo: dict | None = None) -> set[str]:
-    memo = _memo if _memo is not None else {}
-    if rel in memo:
-        return memo[rel]
-    memo[rel] = {rel}  # break cycles
-    out = {rel}
-    for dep in _direct_imports(rel, repo):
-        out |= _dep_closure(dep, repo, memo)
-    memo[rel] = out
-    return out
-
-
 def _git(repo: str, *args: str) -> str:
     return subprocess.run(
         ["git", "-C", repo, *args], capture_output=True, text=True, check=True
     ).stdout
-
-
-def _def_lines(src: str) -> dict[str, range] | None:
-    """name -> 0-based line range of every top-level def/class in `src`,
-    decorators included (a query's @register carries its oracle SQL);
-    None when `src` does not parse."""
-    try:
-        tree = ast.parse(src)
-    except SyntaxError:
-        return None
-    return {
-        node.name: range((node.decorator_list or [node])[0].lineno - 1, node.end_lineno)
-        for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-    }
-
-
-def _non_def_residue(src: str) -> str:
-    """The module source with every top-level def/class segment removed —
-    the imports/constants a def could close over."""
-    spans = _def_lines(src)
-    if spans is None:
-        return src
-    drop = set().union(*spans.values())
-    return "\n".join(l for i, l in enumerate(src.splitlines()) if i not in drop)
-
-
-def _top_level_defs(src: str) -> dict[str, str]:
-    """name -> source segment for every top-level def/class in `src`."""
-    lines = src.splitlines()
-    return {name: "\n".join(lines[r.start : r.stop]) for name, r in (_def_lines(src) or {}).items()}
 
 
 def _file_at(rel: str, commit: str | None, repo: str = REPO) -> str:
@@ -124,30 +71,76 @@ def _file_at(rel: str, commit: str | None, repo: str = REPO) -> str:
         return ""
 
 
-def _import_bindings(rel: str, repo: str = REPO) -> dict[str, str]:
-    """Local binding name -> repo-relative file, for every package-internal
-    import in `rel` (e.g. `from pkg.sources import pydatasource as pyds`
-    yields {'pyds': 'pkg/sources/pydatasource.py'})."""
+def _split(src: str) -> tuple[dict[str, str], str, dict[str, list[ast.stmt]], list[ast.stmt]]:
+    """(name -> segment source, residue without blank lines, name -> the
+    segment's statements, the residue's statements) of `src`; a name bound
+    by several top-level statements owns them all.  A file that does not
+    parse is all residue."""
     try:
-        tree = ast.parse(open(os.path.join(repo, rel)).read())
-    except (OSError, SyntaxError):
-        return {}
-    out: dict[str, str] = {}
-    for node in ast.walk(tree):
+        tree = ast.parse(src)
+    except SyntaxError:
+        return {}, src, {}, []
+    lines = src.splitlines()
+    stmts: dict[str, list[ast.stmt]] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [
+                n.id for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            ]
+        else:
+            continue
+        for name in names:
+            stmts.setdefault(name, []).append(node)
+
+    def span(node: ast.stmt) -> range:
+        return range((getattr(node, "decorator_list", None) or [node])[0].lineno - 1, node.end_lineno)
+
+    segs = {n: "\n".join(lines[i] for s in ss for i in span(s)) for n, ss in stmts.items()}
+    drop = {i for ss in stmts.values() for s in ss for i in span(s)}
+    residue = "\n".join(l for i, l in enumerate(lines) if i not in drop and l.strip())
+    rest = [s for s in tree.body if s.lineno - 1 not in drop]
+    return segs, residue, stmts, rest
+
+
+def _bindings(stmts: list[ast.stmt], repo: str) -> dict[str, tuple[str, str | None]]:
+    """Local name -> (repo-relative file, attr) for every package-internal
+    import in `stmts`; attr is None for a module binding."""
+    out: dict[str, tuple[str, str | None]] = {}
+    for node in (n for s in stmts for n in ast.walk(s)):
         if isinstance(node, ast.Import):
             for a in node.names:
                 if a.name.startswith(PKG) and (f := _module_rel_file(a.name, repo)):
-                    out[a.asname or a.name.split(".")[0]] = f
+                    out[a.asname or a.name.split(".")[0]] = (f, None)
         elif isinstance(node, ast.ImportFrom) and node.module and node.module.startswith(PKG):
             mod_file = _module_rel_file(node.module, repo)
             for a in node.names:
-                # `from pkg.operators import windows` binds a submodule;
-                # `from pkg.operators.windows import rolling_mean` binds an
-                # attr — charge it to the defining module's file either way.
-                sub = _module_rel_file(f"{node.module}.{a.name}", repo)
-                if sub or mod_file:
-                    out[a.asname or a.name] = sub or mod_file
+                if sub := _module_rel_file(f"{node.module}.{a.name}", repo):
+                    out[a.asname or a.name] = (sub, None)
+                elif mod_file:
+                    out[a.asname or a.name] = (mod_file, a.name)
     return out
+
+
+def _uses(stmts: list[ast.stmt]) -> tuple[set[str], set[tuple[str, str]], set[str], set[str]]:
+    """(names, (name, attr) pairs, names used other than as `name.attr`,
+    string literals) in the code of one segment."""
+    names, attrs, bare, strings = set(), set(), set(), set()
+    under_attr: set[int] = set()
+    for node in (n for s in stmts for n in ast.walk(s)):  # a parent precedes its children
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            attrs.add((node.value.id, node.attr))
+            under_attr.add(id(node.value))
+        elif isinstance(node, ast.Name):
+            names.add(node.id)
+            if id(node) not in under_attr:
+                bare.add(node.id)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            strings.add(node.value)
+    return names, attrs, bare, strings
 
 
 def _anchor_commit(rnd: int, repo: str = REPO) -> str | None:
@@ -159,30 +152,10 @@ def _anchor_commit(rnd: int, repo: str = REPO) -> str | None:
         return None
 
 
-def _names(name: str, src: str) -> bool:
-    return re.search(rf"\b{re.escape(name)}\b", src) is not None
-
-
-def _same_file_reach(binding: str, old_defs: dict[str, str], new_defs: dict[str, str]) -> set[str]:
-    """`binding` plus every def of the same file reachable from it by name,
-    transitively (a helper calling a changed sibling-of-sibling counts)."""
-    all_defs = set(old_defs) | set(new_defs)
-    reach = {binding}
-    frontier = [binding]
-    while frontier:
-        body = new_defs.get((d := frontier.pop()), old_defs.get(d, ""))
-        for s in all_defs - reach:
-            if _names(s, body):
-                reach.add(s)
-                frontier.append(s)
-    return reach
-
-
 def changed_queries(repo: str = REPO, builders: dict | None = None) -> dict[str, list[str]] | None:
     """name -> sorted reasons for every query in `builders` (name -> build
-    function; default the whole registry) whose implementation changed
-    since the anchor.  Reasons: "builder", "helper:<def>", or a bound
-    repo-relative file.  None when the anchor cannot be resolved (no git
+    function; default the whole registry) whose reached code changed
+    since the anchor.  None when the anchor cannot be resolved (no git
     history)."""
     if builders is None:
         from real_time_big_data_iot_monitoring_pipeline_spark.plans import REGISTRY
@@ -199,24 +172,48 @@ def changed_queries(repo: str = REPO, builders: dict | None = None) -> dict[str,
     changed = set(_git(repo, "diff", "--name-only", anchor).split())
     changed |= set(_git(repo, "ls-files", "--others", "--exclude-standard").split())
 
-    closure_memo: dict = {}
-    defs_cache: dict[tuple[str, str | None], dict[str, str]] = {}
-    bindings_cache: dict[str, dict[str, str]] = {}
+    files: dict[str, tuple] = {}  # rel -> (segs, residue, stmts, bindings, old segs, old residue)
+    edges_memo: dict[tuple[str, str], set[tuple[str, str]]] = {}
 
-    def defs(rel: str, commit: str | None) -> dict[str, str]:
-        if (rel, commit) not in defs_cache:
-            defs_cache[rel, commit] = _top_level_defs(_file_at(rel, commit, repo))
-        return defs_cache[rel, commit]
+    def load(rel: str) -> tuple:
+        if rel not in files:
+            src = _file_at(rel, None, repo)
+            segs, residue, stmts, rest = _split(src)
+            old = _split(_file_at(rel, anchor, repo))[:2] if rel in changed else (segs, residue)
+            files[rel] = (segs, residue, stmts, _bindings(rest, repo), *old)
+        return files[rel]
 
-    def binding_unchanged(binding: str, dep_file: str) -> bool:
-        old, new = defs(dep_file, anchor), defs(dep_file, None)
-        if binding not in old and binding not in new:
-            return False  # a module binding: any change in the file counts
-        if _non_def_residue(_file_at(dep_file, anchor, repo)) != _non_def_residue(
-            _file_at(dep_file, None, repo)
-        ):
-            return False
-        return all(old.get(d) == new.get(d) for d in _same_file_reach(binding, old, new))
+    def resolve(rel: str, name: str) -> tuple[str, str]:
+        """The node `rel`'s attribute `name` stands for."""
+        segs, _, _, binds, _, _ = load(rel)
+        if name in segs:
+            return rel, name
+        if name in binds:
+            dep, attr = binds[name]
+            return resolve(dep, attr) if attr else (dep, WHOLE)
+        return rel, WHOLE
+
+    def edges(node: tuple[str, str]) -> set[tuple[str, str]]:
+        if node not in edges_memo:
+            rel, name = node
+            segs, _, stmts, binds, old, _ = load(rel)
+            if name == WHOLE:
+                edges_memo[node] = {(rel, s) for s in set(segs) | set(old)}
+                return edges_memo[node]
+            own = stmts.get(name, [])  # none for a segment only the anchor has
+            names, attrs, bare, strings = _uses(own)
+            binds = {**binds, **_bindings(own, repo)}  # its own imports too
+            out = {(rel, n) for n in names | strings if n in segs}
+            for n in names & set(binds):
+                dep, attr = binds[n]
+                if attr:
+                    out.add(resolve(dep, attr))
+                else:
+                    out |= {resolve(dep, a) for m, a in attrs if m == n}
+                    if n in bare:
+                        out.add((dep, WHOLE))
+            edges_memo[node] = out
+        return edges_memo[node]
 
     out: dict[str, list[str]] = {}
     for name, build in sorted(builders.items()):
@@ -224,28 +221,23 @@ def changed_queries(repo: str = REPO, builders: dict | None = None) -> dict[str,
         if not src_file:
             continue
         rel = os.path.relpath(src_file, repo)
-        try:
-            builder_src = inspect.getsource(build)
-        except (OSError, TypeError):
-            builder_src = ""
+        start = (rel, build.__name__) if build.__name__ in load(rel)[0] else (rel, WHOLE)
+        reach, frontier = {start}, [start]
+        while frontier:
+            for nxt in edges(frontier.pop()) - reach:
+                reach.add(nxt)
+                frontier.append(nxt)
         reasons: set[str] = set()
-        if rel in changed:
-            old, new = defs(rel, anchor), defs(rel, None)
-            bname = build.__name__
-            if old.get(bname) != new.get(bname):
-                reasons.add("builder")
-            for dname, dsrc in new.items():
-                if dname != bname and old.get(dname) != dsrc and _names(dname, builder_src):
-                    reasons.add(f"helper:{dname}")
-        if rel not in bindings_cache:
-            bindings_cache[rel] = _import_bindings(rel, repo)
-        for binding, dep_file in sorted(bindings_cache[rel].items()):
-            if dep_file in reasons or not _names(binding, builder_src):
+        for f, seg in reach:
+            segs, residue, _, _, old, old_residue = load(f)
+            if residue != old_residue:
+                reasons.add(f)
+            if seg == WHOLE or segs.get(seg) == old.get(seg):
                 continue
-            hits = _dep_closure(dep_file, repo, closure_memo) & changed
-            if not hits or (hits == {dep_file} and binding_unchanged(binding, dep_file)):
-                continue
-            reasons.add(dep_file)
+            if f != rel:
+                reasons.add(f"{f}:{seg}")
+            else:
+                reasons.add("builder" if seg == build.__name__ else f"helper:{seg}")
         if reasons:
             out[name] = sorted(reasons)
     return out
