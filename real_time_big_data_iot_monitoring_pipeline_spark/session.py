@@ -4,8 +4,11 @@ large-cluster execution.
 The reference builds its session at ``spark_streaming.py:93-111`` (local[*],
 a checkpoint dir, Kafka package). We add the scale-oriented knobs the
 reference never needed: AQE (runtime re-planning, skew-join splitting,
-partition coalescing), Arrow for any Python<->JVM data exchange, and an
-explicit UTC session timezone so event-time semantics are host-independent.
+partition coalescing), Arrow for any Python<->JVM data exchange, an
+explicit UTC session timezone so event-time semantics are host-independent,
+and a generated-class cache that holds the engine's working set, so a
+repeated plan is not recompiled.  That cache size is a static conf: it
+applies only when ``get_session`` starts the JVM's first session.
 """
 
 from __future__ import annotations
@@ -43,6 +46,15 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Exchange reuse + pushdown are on by default; stated for visibility.
     "spark.sql.parquet.filterPushdown": "true",
+    # The generated-class cache is an LRU.  Spark's default of 100 entries
+    # is smaller than one dashboard refresh, which walks its classes in the
+    # same order every time, so a warm refresh recompiled nearly all of
+    # them with Janino.  Measured working sets (distinct classes, nothing
+    # evicted): one perfbench dashboard refresh ~148, a whole perfbench
+    # stream_ingest run 60, one bench.py run on local[2] 893 at sf0.01 and
+    # 956 at sf0.1.  Static: it takes effect only when get_session starts
+    # the JVM's first session, so it is not re-asserted below.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 

@@ -177,6 +177,18 @@ def test_each_call_takes_a_fresh_checkpoint(spark, readings):
     assert ids_first != ids_again
 
 
+def test_warm_refresh_compiles_nothing(spark, readings):
+    """A second full_dashboard over the same input finds every generated
+    class in Spark's codegen cache: the cache (session.ENGINE_CONF) holds
+    a refresh's working set, so a warm refresh runs Janino zero times."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    dim = sensors.location_dim(spark)
+    dashboard.full_dashboard(readings, dim)
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    dashboard.full_dashboard(readings, dim)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
 def test_panels_match_direct_functions_and_duckdb(spark, tmp_path):
     """Oracle for the shared materialization: over a seeded history staged
     as parquet and windowed to 24 h, each panel of full_dashboard has the

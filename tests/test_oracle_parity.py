@@ -150,8 +150,9 @@ def test_changed_queries_follow_reached_code(tmp_path):
     reaches changed: its builder (oracle SQL in the decorator included, a
     new builder), a same-file def reached transitively or by a string
     lookup, a module constant it reads, or a def two imports away.  A
-    docstring mention of an edited builder and a deleted def nothing calls
-    in a module-bound file change nothing."""
+    docstring mention of an edited builder, a comment added between defs
+    and a deleted def nothing calls in a module-bound file change
+    nothing."""
     import importlib.util
     import subprocess
 
@@ -170,6 +171,7 @@ def test_changed_queries_follow_reached_code(tmp_path):
             ("SELECT 1", "SELECT 2"),
             ("(1, 2)", "(1, 3)"),
             ("return 6", "return 7"),
+            ("\n\n\ndef sibling(", "\n\n\n# a comment-only edit between defs\ndef sibling("),
         ],
         f"{_FIXTURE_PKG}/dep2.py": [("return 10", "return 11")],
         f"{_FIXTURE_PKG}/mods.py": [("\n\n\ndef dead():\n    return 21\n", "\n")],

@@ -18,8 +18,9 @@ reference):
 
 A query is *changed* when a segment it reaches differs from the anchor
 ("builder", "helper:<name>" in the builder's file, "<file>:<name>"
-elsewhere) or when the residue of a file it reaches differs, blank lines
-aside ("<file>").  A builder absent at the anchor is changed.
+elsewhere) or when the residue of a file it reaches differs as code
+("<file>"; compared by `ast.dump`, so a comment or blank line between defs
+changes nothing).  A builder absent at the anchor is changed.
 
 tests/test_oracle_parity.py runs every changed oracle query outside
 DRIVER_WINDOW in the default suite.
@@ -72,10 +73,10 @@ def _file_at(rel: str, commit: str | None, repo: str = REPO) -> str:
 
 
 def _split(src: str) -> tuple[dict[str, str], str, dict[str, list[ast.stmt]], list[ast.stmt]]:
-    """(name -> segment source, residue without blank lines, name -> the
-    segment's statements, the residue's statements) of `src`; a name bound
-    by several top-level statements owns them all.  A file that does not
-    parse is all residue."""
+    """(name -> segment source, the residue's statements as `ast.dump`
+    text, name -> the segment's statements, the residue's statements) of
+    `src`; a name bound by several top-level statements owns them all.  A
+    file that does not parse is all residue, compared as text."""
     try:
         tree = ast.parse(src)
     except SyntaxError:
@@ -101,9 +102,8 @@ def _split(src: str) -> tuple[dict[str, str], str, dict[str, list[ast.stmt]], li
 
     segs = {n: "\n".join(lines[i] for s in ss for i in span(s)) for n, ss in stmts.items()}
     drop = {i for ss in stmts.values() for s in ss for i in span(s)}
-    residue = "\n".join(l for i, l in enumerate(lines) if i not in drop and l.strip())
     rest = [s for s in tree.body if s.lineno - 1 not in drop]
-    return segs, residue, stmts, rest
+    return segs, "\n".join(ast.dump(s) for s in rest), stmts, rest
 
 
 def _bindings(stmts: list[ast.stmt], repo: str) -> dict[str, tuple[str, str | None]]:
