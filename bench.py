@@ -252,7 +252,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     build_secs: dict[str, float] = {}
-    timed_compiles = 0
+    compiles: dict[str, int] = {}
     quartiles = {(len(HEADLINE) * k) // 4 for k in (1, 2, 3)}
     for qi, name in enumerate(HEADLINE):
         if qi in quartiles:
@@ -292,10 +292,13 @@ def main() -> None:
         build_secs[name] = round(time.perf_counter() - t0, 3)
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 3)
-        timed_compiles += _compilations(spark) - c0
+        compiles[name] = _compilations(spark) - c0
 
+    for name, n in compiles.items():
+        print(f"codegen: {name}: {n} compilations in its timed build and execution",
+              file=sys.stderr)
     print(
-        f"codegen: {timed_compiles} compilations in the timed region, "
+        f"codegen: {sum(compiles.values())} compilations in the timed region, "
         f"{_compilations(spark)} in the whole run",
         file=sys.stderr,
     )

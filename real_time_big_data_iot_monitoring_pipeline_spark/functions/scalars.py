@@ -127,18 +127,6 @@ def sum_fixed(col: Column, decimals: int = 2, out: int = 2) -> Column:
     return round_det(F.sum(as_cents(col, decimals)) / F.lit(scale), out)
 
 
-def std_fixed(col: Column, decimals: int = 2, out: int = 4) -> Column:
-    """Order-independent sample stddev via exact integer moments:
-    var = (Σx² − (Σx)²/n) / (n−1) over the cents representation."""
-    c = as_cents(col, decimals)
-    cd = c.cast("decimal(38,0)")  # decimal(38,0): exact past the int64 cliff (round-11 scale audit)
-    n = F.count(col).cast("double")
-    sx = F.sum(c).cast("double")
-    sxx = F.sum(cd * cd).cast("double")
-    scale = float(10 ** decimals)
-    return round_det(F.sqrt(F.try_divide(sxx - sx * sx / n, n - F.lit(1.0))) / F.lit(scale), out)
-
-
 def corr_int(x: Column, y: Column, out: int = 4) -> Column:
     """Order-independent Pearson correlation of two INTEGER-valued columns
     via exact moments (corr is scale/shift-invariant, so fixed-decimal

@@ -186,20 +186,6 @@ def _resize_kernel(payload: bytes, w: int, h: int) -> tuple[bytes, str]:
     return (payload * reps)[:n], "application/octet-stream"
 
 
-def _resize_stub(payload: bytes, w: int, h: int, real: bool = False) -> bytes:
-    """Bytes-only wrapper over `_resize_kernel`.  `real=True` is the
-    deployment gate: any payload the real codec cannot decode fails
-    loudly (unsupported/corrupt PNG re-raises its decode error; non-PNG
-    raises NotImplementedError) instead of falling back to the stub."""
-    if real:  # pragma: no cover - codec path for real deployments
-        if payload[: len(_PNG_SIG)] == _PNG_SIG:
-            return png_encode(png_resize_nearest(png_decode(bytes(payload)), h, w))
-        raise NotImplementedError(
-            "non-PNG image codecs (e.g. JPEG) unavailable in this container"
-        )
-    return _resize_kernel(payload, w, h)[0]
-
-
 def resize_images(
     df: DataFrame, id_col: str = "doc_id", width: int = 32, height: int = 16
 ) -> DataFrame:
@@ -747,8 +733,7 @@ def synth_png(df: DataFrame, id_col: str = "doc_id", height: int = 32, width: in
 
 def png_resize(df: DataFrame, out_h: int, out_w: int) -> DataFrame:
     """REAL resize stage: decode PNG -> nearest-neighbor stride ->
-    re-encode PNG.  Map-only Arrow stage, constant memory per batch —
-    the executed replacement for `_resize_stub`'s documented gate."""
+    re-encode PNG.  Map-only Arrow stage, constant memory per batch."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -122,9 +122,8 @@ def repetition_ratio(
     repetitive documents are low-value or degenerate).
 
     Shingles build via posexplode + `lead` windows + hash agg — every
-    expression codegen'd (measured ~5x faster at sf0.1 than the
-    interpreted array-lambda construction, which survives as
-    `repetition_ratio_arrays` for shuffle-free contexts).  The shuffle
+    expression codegen'd (measured ~5x faster at sf0.1 than an
+    interpreted array-lambda construction).  The shuffle
     partitions by doc_id, so work parallelizes across documents at any
     corpus size.  Documents with fewer than k words are excluded (no
     k-grams exist)."""
@@ -152,32 +151,6 @@ def repetition_ratio(
             "distinct_shingles",
             round_det(F.lit(1.0) - F.try_divide(distinct, total), 6).alias("rep_ratio"),
         )
-    )
-
-
-def repetition_ratio_arrays(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Shuffle-free twin of `repetition_ratio`: pure array expressions
-    over the row's own words (interpreted higher-order lambdas — slower
-    per byte, but a pure map).  Use where a shuffle is unavailable or
-    unwanted: streaming maps, already-partitioned pipelines."""
-    ws = F.split(F.col(text_col), " ")
-    n = F.size(ws)
-    starts = F.sequence(F.lit(0), n - F.lit(k))
-    sh = F.transform(
-        starts,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(ws, i + F.lit(j + 1)) for j in range(k)]
-        ),
-    )
-    total = F.size(sh)
-    distinct = F.size(F.array_distinct(sh))
-    return df.filter(n >= k).select(
-        F.col(id_col),
-        total.alias("total_shingles"),
-        distinct.alias("distinct_shingles"),
-        round_det(F.lit(1.0) - F.try_divide(distinct, total), 6).alias("rep_ratio"),
     )
 
 

@@ -1970,7 +1970,7 @@ def stream_schema_evolution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pyds_clone_vacuum_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-TABLE REACHABILITY UNDER VACUUM (round-12 registration —
     the oracle-checked twin of the round-11 multi-table crash sweeps,
-    tests/test_round11_machines.py:219-358): vacuum on a shallow
+    tests/test_lakehouse_crash_machine.py, multi-table section): vacuum on a shallow
     clone's SOURCE must never reclaim data files the clone still
     references, and vacuum on the CLONE must never touch the source's
     directory at all — the invariant Delta/Iceberg shallow clones need
@@ -2077,7 +2077,7 @@ def pyds_clone_vacuum_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_offset_cursor_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE MANIFEST STREAM TAIL UNDER AN INDUCED CURSOR REPLAY
     (round-12 registration — the oracle-checked twin of the round-11
-    cursor-fault machine, tests/test_round11_machines.py:362-489):
+    cursor-fault machine, tests/test_lakehouse_crash_machine.py):
     output must stay EXACTLY-ONCE when the engine's offset cursor is
     forced to replay — the contract the reference's Kafka consumer
     leans on its broker for (ref:spark_streaming.py:125-130) expressed

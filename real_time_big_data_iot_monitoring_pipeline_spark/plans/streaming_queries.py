@@ -875,7 +875,7 @@ def stream_available_now_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stateful_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSTOM STATEFUL OPERATOR, value-hash-checked: the events feed
-    replays through `stateful.extremes_stream_compat` — an
+    replays through `stateful.extremes_stream` — an
     `applyInPandasWithState` fold keeping (n, min, max, exact cents
     sum) per key across micro-batches, update mode, one state row per
     key — and the changelog compaction (latest batch per key) must
@@ -899,7 +899,7 @@ def stream_stateful_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").cast("string").alias("sensor_id"),
             F.col("value").alias("temperature"),
         )
-        out = stateful.extremes_stream_compat(stream)
+        out = stateful.extremes_stream(stream)
         pipeline.run_stream_to_parquet(out, result, output_mode="update", with_batch_id=True)
     res = spark.read.parquet(result)
     return res.groupBy("sensor_id").agg(

@@ -53,7 +53,7 @@ ENGINE_CONF: dict[str, str] = {
     # evicted): one perfbench dashboard refresh ~148, a whole perfbench
     # stream_ingest run 60, one bench.py run on local[2] 893 at sf0.01 and
     # 956 at sf0.1.  Static: it takes effect only when get_session starts
-    # the JVM's first session, so it is not re-asserted below.
+    # the JVM's first session.
     "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
@@ -68,7 +68,10 @@ def get_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract)
     so tests and bench share one code path; on a real cluster the caller
-    passes nothing and spark-submit supplies the master.
+    passes nothing and spark-submit supplies the master.  ``extra_conf``
+    overrides ENGINE_CONF.  When a session already runs, ``getOrCreate``
+    applies every runtime-settable conf of the builder to it; static confs
+    keep their values.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
@@ -82,13 +85,4 @@ def get_session(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    # getOrCreate may have returned a pre-existing session (the driver's):
-    # re-assert the runtime-settable confs the engine relies on.
-    for k in (
-        "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.parquet.inferTimestampNTZ.enabled",
-        "spark.sql.adaptive.enabled",
-    ):
-        spark.conf.set(k, ENGINE_CONF[k])
-    return spark
+    return builder.getOrCreate()

@@ -1,108 +1,16 @@
-"""Data-layout management: date-partitioned parquet at rest.
+"""Data-layout management: bucketed parquet at rest.
 
-The reference leans on PostgreSQL B-tree indexes for time-range scans
-(``init.sql:29-31``).  The Spark-at-rest analogue is directory
-partitioning by a time bucket: a predicate on the partition column prunes
-whole directories at planning time (`PartitionFilters` in the plan,
-zero I/O for excluded days), and row-group min/max statistics prune
-within files.  At 100 TB this layout decision dominates every time-range
-query's cost.
+The reference leans on PostgreSQL B-tree indexes for key lookups and
+joins (``init.sql:29-31``).  The Spark-at-rest analogue for a join key is
+bucketing: rows are hash-clustered into files by the key once at write
+time, so later joins and aggregations on that key skip the exchange and
+equality predicates prune to one bucket.  Z-order clustering lives with
+the table format (`pydatasource.optimize_zorder`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_date_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "timestamp",
-    mode: str = "overwrite",
-) -> None:
-    """Write with an `event_date` partition column derived from event
-    time — the UTC calendar date of the instant (`utc_naive`), so the
-    layout is identical no matter the session timezone of the writer.
-    `partitionOverwriteMode=dynamic` keeps re-writes idempotent per
-    partition (only touched dates are replaced)."""
-    from real_time_big_data_iot_monitoring_pipeline_spark.functions.scalars import utc_naive
-
-    (
-        df.withColumn("event_date", F.to_date(utc_naive(F.col(ts_col))))
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("event_date")
-        .parquet(path)
-    )
-
-
-def read_date_range(
-    spark: SparkSession,
-    path: str,
-    start_date: str,
-    end_date: str,
-) -> DataFrame:
-    """Read back with a partition-column predicate — prunes directories
-    at planning time (visible as PartitionFilters in explain)."""
-    df = spark.read.parquet(path)
-    return df.filter(
-        (F.col("event_date") >= F.lit(start_date)) & (F.col("event_date") < F.lit(end_date))
-    )
-
-
-def compact(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet dataset into
-    ~`target_file_bytes` files and return the output file count.
-
-    Streaming sinks and per-batch upserts accumulate thousands of tiny
-    files; at scale every query then pays file-listing + per-file open
-    overhead and loses row-group-sized reads.  The rewrite sizes its
-    output from Catalyst's scan estimate (`ceil(bytes / target)`) and
-    uses round-robin `repartition(n)` for evenly-sized files — a full
-    shuffle, which is the point: compaction IS data movement, run it as
-    a scheduled maintenance job per partition, not inline.
-
-    The output count is sized from the SOURCE FILE BYTES (recursive
-    Hadoop listing — the same numbers `ls -R` shows), not Catalyst's
-    plan-statistics estimate: file bytes are a public, version-stable
-    contract, while plan stats came via the private `_jdf` bridge
-    (round-3 verdict, "What's wrong" #2) and can also be inflated by
-    session compression-ratio heuristics.
-
-    Writes to `dst_path` (swap directories after success): an in-place
-    overwrite would delete the files it is still reading."""
-    assert src_path != dst_path, "compact: in-place rewrite would read-after-delete"
-    size = _listed_bytes(spark, src_path)
-    n = max(1, -(-size // target_file_bytes))
-    spark.read.parquet(src_path).repartition(n).write.mode("overwrite").parquet(dst_path)
-    return n
-
-
-def _listed_bytes(spark: SparkSession, path: str) -> int:
-    """Total data-file bytes under `path` via the JVM Hadoop FileSystem
-    (public `spark._jvm` gateway to the stable `org.apache.hadoop.fs`
-    API — works for any supported filesystem scheme, not just local
-    disk).  Skips hidden/metadata files (`_SUCCESS`, `.crc`, ...), which
-    parquet readers also ignore."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    total = 0
-    it = fs.listFiles(p, True)  # recursive
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        total += st.getLen()
-    return total
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -135,67 +43,3 @@ def write_bucketed(
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.format("parquet").saveAsTable(table)
-
-
-def zorder_key(col_a, col_b, bits: int = 16):
-    """Z-order (Morton) key: interleave the low `bits` bits of two
-    non-negative integer columns into one long.
-
-    Sorting a file layout by this key clusters rows that are close in
-    BOTH dimensions into the same parquet row groups, so min/max
-    row-group statistics prune two-dimensional predicates (e.g.
-    `user BETWEEN ... AND day BETWEEN ...`) — a single-column sort can
-    only prune one of the two.  This is the open-table-format "Z-ORDER
-    BY" as a pure column expression: a fixed chain of shift/or terms,
-    fully inside whole-stage codegen.
-
-    Columns must already be bounded to `bits` bits (mask or bucket them
-    first); values are clamped defensively with a mask so an outlier
-    cannot corrupt the ordering of unrelated rows.
-
-    NORMALIZE both dimensions to the full bit width before calling: a
-    column whose domain uses fewer bits than the other contributes
-    constant high interleave bits, and the Morton order degenerates to
-    a single-column sort for it.  Measured in
-    tools/scale_probe_zorder.py: a 9-bit day raw-interleaved with a
-    14-bit user pruned NOTHING on day; scaling day into the 14-bit
-    range gave 17% row groups read on day-only predicates and 5% on the
-    two-dimensional box."""
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    mask = F.lit((1 << bits) - 1)
-    a = (F.col(col_a) if isinstance(col_a, str) else col_a).cast("long").bitwiseAND(mask)
-    b = (F.col(col_b) if isinstance(col_b, str) else col_b).cast("long").bitwiseAND(mask)
-    key: Column = F.lit(0).cast("long")
-    one = F.lit(1)
-    for i in range(bits):
-        key = key.bitwiseOR(
-            F.shiftleft(F.shiftright(a, i).bitwiseAND(one), 2 * i)
-        ).bitwiseOR(F.shiftleft(F.shiftright(b, i).bitwiseAND(one), 2 * i + 1))
-    return key
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    key,
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Write `df` range-partitioned and sorted by a clustering key
-    (typically `zorder_key(...)`): each output file covers a tight key
-    range, and within a file the rows are key-ordered, so every parquet
-    row group carries tight min/max statistics on the clustered
-    columns.  The one-time range shuffle is the investment; every
-    predicate on the clustered dimensions afterwards reads a fraction
-    of the row groups."""
-    tmp = "_cluster_key"
-    (
-        df.withColumn(tmp, key)
-        .repartitionByRange(n_files, F.col(tmp))
-        .sortWithinPartitions(tmp)
-        .drop(tmp)
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -3,15 +3,21 @@ the Spark primitive for operators the built-in windowed aggregations
 can't express (SURVEY §2.9 notes the reference has none; this is the
 engine's extension point for them).
 
-Implemented operator: per-sensor exponentially-weighted moving average
-(EWMA) with threshold-crossing detection.  State per key is O(1) — the
-running EWMA and a counter — so state-store size scales with sensor
-count, not event count: the property that keeps an unbounded stream's
-state bounded on a 1000-executor cluster.
+Implemented operators, all on `applyInPandasWithState`:
+- per-sensor exponentially-weighted moving average (EWMA) with
+  threshold-crossing detection (`ewma_stream`);
+- per-sensor running extremes with an exact cents sum (`extremes_stream`);
+- CUSUM drift detection (`cusum_stream`);
+- hysteresis alerting (`hysteresis_stream`);
+- a timeout-evicting sessionizer (`session_close_stream`).
 
-The kernel is Arrow-batched pandas (not row-at-a-time), and it is pure
-per (key, state, batch), so micro-batch replays after failure recompute
-identical state.
+State per key is O(1), so state-store size scales with sensor count,
+not event count: the property that keeps an unbounded stream's state
+bounded on a 1000-executor cluster.
+
+The kernels are Arrow-batched pandas (not row-at-a-time), and they are
+pure per (key, state, batch), so micro-batch replays after failure
+recompute identical state.
 """
 
 from __future__ import annotations
@@ -95,7 +101,7 @@ def ewma_stream(readings: DataFrame, alpha: float = 0.2, threshold: float = 30.0
     )
 
 
-EXTREMES_COMPAT_OUTPUT_SCHEMA = T.StructType(
+EXTREMES_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("sensor_id", T.StringType()),
         T.StructField("n_seen", T.LongType()),
@@ -105,7 +111,7 @@ EXTREMES_COMPAT_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-EXTREMES_COMPAT_STATE_SCHEMA = T.StructType(
+EXTREMES_STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_seen", T.LongType()),
         T.StructField("min_temp", T.DoubleType()),
@@ -120,13 +126,9 @@ def extremes_update(
     batches: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """Per-sensor running extremes + exact cents-sum — the
-    `applyInPandasWithState` twin of `ExtremesProcessor` below, so the
-    extremes fold is executed (not just implemented) in environments
-    where the transformWithState protobuf protocol is unavailable.  The
-    fold is identical: state = (n, min, max, sum_cents); per-element
-    cents rounding keeps the running sum exact and independent of where
-    micro-batch boundaries fall."""
+    """Per-sensor running extremes + exact cents-sum: state = (n, min,
+    max, sum_cents); per-element cents rounding keeps the running sum
+    exact and independent of where micro-batch boundaries fall."""
     if state.exists:
         n, mn, mx, sc = state.get
     else:
@@ -152,90 +154,16 @@ def extremes_update(
     )
 
 
-def extremes_stream_compat(readings: DataFrame) -> DataFrame:
+def extremes_stream(readings: DataFrame) -> DataFrame:
     """Attach the extremes fold via `applyInPandasWithState` (update
-    mode, one row per sensor per micro-batch) — same output schema and
-    values as `extremes_stream`."""
+    mode, one row per sensor per micro-batch)."""
     return readings.groupBy("sensor_id").applyInPandasWithState(
         extremes_update,
-        outputStructType=EXTREMES_COMPAT_OUTPUT_SCHEMA,
-        stateStructType=EXTREMES_COMPAT_STATE_SCHEMA,
+        outputStructType=EXTREMES_OUTPUT_SCHEMA,
+        stateStructType=EXTREMES_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# --- transformWithStateInPandas (Spark 4 arbitrary-state API) ---------------
-try:
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class ExtremesProcessor(StatefulProcessor):
-        """Per-sensor running extremes + exact cents-sum via the modern
-        arbitrary-state API (`transformWithStateInPandas`): ValueState
-        holds (n, min, max, sum_cents); each micro-batch folds its rows
-        in and emits the updated totals.  Functionally overlaps the
-        EWMA operator above but exercises the newer state surface the
-        engine standardizes on going forward.  NOTE: the
-        transformWithState protocol is protobuf-based; environments
-        without `google.protobuf` must use `ewma_stream`
-        (applyInPandasWithState) instead."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "extremes", "n BIGINT, mn DOUBLE, mx DOUBLE, sc BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._state.exists():
-                n, mn, mx, sc = self._state.get()
-            else:
-                n, mn, mx, sc = 0, None, None, 0
-            for pdf in rows:
-                vals = pdf["temperature"]
-                n += len(vals)
-                bmn, bmx = float(vals.min()), float(vals.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-                # per-element cents, then sum: keeps the state exact and
-                # independent of where micro-batch boundaries fall
-                sc += int((vals * 100).round().astype("int64").sum())
-            self._state.update((n, mn, mx, sc))
-            yield pd.DataFrame(
-                {
-                    "sensor_id": [key[0]],
-                    "n_seen": [n],
-                    "min_temp": [mn],
-                    "max_temp": [mx],
-                    "avg_temp": [round(sc / (100.0 * n) + 1e-8, 4)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    EXTREMES_OUTPUT_SCHEMA = (
-        "sensor_id STRING, n_seen BIGINT, min_temp DOUBLE, max_temp DOUBLE, avg_temp DOUBLE"
-    )
-
-    def extremes_stream(readings: DataFrame) -> DataFrame:
-        """Attach the ExtremesProcessor to a streaming readings frame."""
-        return readings.groupBy("sensor_id").transformWithStateInPandas(
-            statefulProcessor=ExtremesProcessor(),
-            outputStructType=EXTREMES_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-except ImportError:  # pragma: no cover - older PySpark without the API
-    ExtremesProcessor = None
-
-    def extremes_stream(readings: DataFrame) -> DataFrame:
-        raise NotImplementedError("transformWithStateInPandas requires PySpark >= 4.0")
 
 
 # --- CUSUM drift detection ---------------------------------------------------

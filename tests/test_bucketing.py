@@ -60,73 +60,3 @@ def test_bucketed_join_matches_unbucketed(spark, sf_dir, bucketed_tables):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     assert sorted(map(tuple, bucketed.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_compact_small_files(spark, tmp_path):
-    """compact() collapses a many-tiny-files dataset into the computed
-    file count with identical rows."""
-    from real_time_big_data_iot_monitoring_pipeline_spark.sources import layout, sensors
-
-    df = sensors.readings(spark, hours=6)
-    src, dst = str(tmp_path / "tiny"), str(tmp_path / "compacted")
-    df.repartition(64).write.mode("overwrite").parquet(src)  # 64 tiny files
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-    n = layout.compact(spark, src, dst, target_file_bytes=1 << 30)
-    assert n == 1
-    assert len(glob.glob(f"{dst}/part-*.parquet")) == 1
-    a = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    b = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
-    assert a == b
-
-
-def test_zorder_key_matches_python_interleave(spark):
-    """zorder_key equals a bit-interleave reference implementation."""
-    from pyspark.sql import functions as F
-
-    from real_time_big_data_iot_monitoring_pipeline_spark.sources.layout import zorder_key
-
-    def ref(a, b, bits=16):
-        k = 0
-        for i in range(bits):
-            k |= ((a >> i) & 1) << (2 * i)
-            k |= ((b >> i) & 1) << (2 * i + 1)
-        return k
-
-    rows = [(a, b) for a in (0, 1, 5, 255, 65535) for b in (0, 2, 7, 1023, 65535)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = {
-        (r["a"], r["b"]): r["z"]
-        for r in df.select("a", "b", zorder_key("a", "b").alias("z")).collect()
-    }
-    for a, b in rows:
-        assert got[(a, b)] == ref(a, b), (a, b)
-    # monotone locality sanity: equal inputs -> equal keys, and the key
-    # of (x+1, y) differs from (x, y)
-    assert got[(5, 7)] != got[(1, 7)]
-
-
-def test_write_clustered_roundtrip_and_row_count(spark, tmp_path):
-    """write_clustered preserves the data exactly (clustering is layout
-    only) and produces the requested file count."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from real_time_big_data_iot_monitoring_pipeline_spark.sources.layout import (
-        write_clustered,
-        zorder_key,
-    )
-
-    df = spark.range(10_000).select(
-        (F.col("id") % 100).alias("u"), (F.col("id") % 37).alias("d"), F.col("id").alias("v")
-    )
-    path = str(tmp_path / "clustered")
-    write_clustered(df, path, zorder_key("u", "d", bits=8), n_files=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.agg(F.sum("v")).collect()[0][0] == sum(range(10_000))
-    files = [f for f in glob.glob(path + "/*.parquet")]
-    assert 1 <= len(files) <= 5  # range partitioner may merge near-empty ranges
-    assert "_cluster_key" not in back.columns

@@ -1,17 +1,18 @@
-"""Round-10 pins: the five round-9 ADVICE findings on the manifest
-table format (sources/pydatasource.py), each fixed this round.
+"""The manifest table format (sources/pydatasource.py): overwrite,
+vacuum, restore, schema-DDL and change-feed contracts, pinned on small
+hand-built tables.
 
-  1. (medium) an EMPTY overwrite with a declared schema resets the
-     table to the writer's schema — the commit gate used to discard it
-     and re-derive from the PRE-commit head, so the reset read back
-     under the OLD table's post-rename columns (and an empty overwrite
-     to a fresh table stayed unreadable despite a declared schema).
-  2. vacuum's staging-dir sweep takes the newest mtime RECURSIVELY —
+  1. An EMPTY overwrite with a declared schema resets the table to the
+     writer's schema; the commit gate once discarded it and re-derived
+     from the PRE-commit head, so the reset read back under the OLD
+     table's post-rename columns (and an empty overwrite to a fresh
+     table stayed unreadable despite a declared schema).
+  2. Vacuum's staging-dir sweep takes the newest mtime RECURSIVELY:
      Spark writes under nested _temporary/<n>/task_*/ subdirs whose
      activity does not bump shallow mtimes, so a long rewrite could be
      rmtree'd mid-job.
-  3. restore/clone manifests are exempt from the commit gate's
-     schema_ddl derivation — restoring to a schema-less EMPTY snapshot
+  3. Restore/clone manifests are exempt from the commit gate's
+     schema_ddl derivation: restoring to a schema-less EMPTY snapshot
      stays schema-less instead of inheriting the current head's naming
      epoch.
   4. _parse_ddl splits on the LAST space and refuses malformed

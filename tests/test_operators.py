@@ -21,6 +21,8 @@ from real_time_big_data_iot_monitoring_pipeline_spark.operators import (
     text,
     windows,
 )
+from real_time_big_data_iot_monitoring_pipeline_spark.operators.anomaly import iqr_bounds
+from real_time_big_data_iot_monitoring_pipeline_spark.operators.graph import pagerank_micro
 from real_time_big_data_iot_monitoring_pipeline_spark.sources import sensors
 from real_time_big_data_iot_monitoring_pipeline_spark.sources.tables import load_table
 
@@ -508,11 +510,6 @@ def test_resize_images_shape_and_determinism(spark, sf_dir):
     assert all(bytes(r.payload) == again[r.doc_id] for r in rows)
 
 
-def test_resize_real_path_is_gated():
-    with pytest.raises(NotImplementedError):
-        multimodal._resize_stub(b"abc", 4, 4, real=True)
-
-
 def test_phash_near_dups_planted(spark):
     """Planted perceptual near-duplicates: byte payloads with 1-2 flipped
     characters must surface as banded candidates with small Hamming
@@ -774,3 +771,138 @@ def test_wav_decode_rejects_garbage():
 
     with _pytest.raises(ValueError):
         multimodal.wav_decode(b"not a wav at all........")
+
+
+# --- optimized operator internals vs their earlier expression shape ----------
+
+
+# Operators restructured for speed while claiming bit-identical output.
+# Each test pins the claim against the earlier expression shape (rebuilt
+# inline), so an edit that silently changes values fails here even before
+# the oracle-parity leg runs.
+
+
+def _rows(df, cols=None):
+    if cols:
+        df = df.select(*cols)
+    return sorted(map(tuple, df.collect()))
+
+
+def test_minhash_single_agg_equals_seed_exploded_shape(spark, sf_dir):
+    """The round-12 single-aggregation signature builder (32 flat
+    min(xxhash64(shingle, s)) columns, one shuffle) must equal the
+    pre-optimization seed-exploded double aggregation row for row."""
+    docs = load_table(spark, sf_dir, "documents").limit(200)
+    num_hashes = 8
+
+    new = dedup.minhash_signatures(docs, num_hashes=num_hashes)
+
+    sh = dedup.word_shingles(docs, "doc_id", "text", 3)
+    hh = sh.select(
+        "doc_id", "shingle", F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("s")
+    )
+    old = (
+        hh.select("doc_id", "s", F.xxhash64(F.col("shingle"), F.col("s")).alias("a"))
+        .groupBy("doc_id", "s")
+        .agg(F.min("a").alias("m"))
+        .groupBy("doc_id")
+        .agg(F.expr("transform(array_sort(collect_list(struct(s, m))), x -> x.m)").alias("sig"))
+    )
+    assert _rows(new) == _rows(old)
+
+
+def test_minhash_portable_single_agg_equals_seed_exploded_shape(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").limit(120)
+    num_hashes = 8
+    new = dedup.minhash_signatures_portable(docs, num_hashes=num_hashes)
+
+    sh = dedup.word_shingles(docs, "doc_id", "text", 3)
+    hh = sh.select(
+        "doc_id", dedup._portable_hash(F.col("shingle")).alias("h")
+    ).select("doc_id", "h", F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("s"))
+    old = (
+        hh.select(
+            "doc_id",
+            "s",
+            (((2 * F.col("s") + 1) * F.col("h") + 1000003 * F.col("s")) % dedup.PORTABLE_P).alias("a"),
+        )
+        .groupBy("doc_id", "s")
+        .agg(F.min("a").alias("m"))
+        .groupBy("doc_id")
+        .agg(F.expr("transform(array_sort(collect_list(struct(s, m))), x -> x.m)").alias("sig"))
+    )
+    assert _rows(new) == _rows(old)
+
+
+@pytest.fixture(scope="module")
+def symmetric_edges(spark, sf_dir):
+    li = load_table(spark, sf_dir, "lineitem").limit(5000)
+    o = load_table(spark, sf_dir, "orders")
+    e0 = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").alias("src"),
+            (F.lit(10_000_000) + F.col("l_suppkey")).alias("dst"),
+        )
+        .agg(F.count(F.lit(1)).alias("weight"))
+    )
+    return e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+    ).localCheckpoint(eager=True)
+
+
+def test_pagerank_broadcast_ranks_equals_shuffled(spark, symmetric_edges):
+    base = pagerank_micro(symmetric_edges, iterations=3)
+    fast = pagerank_micro(symmetric_edges, iterations=3, broadcast_ranks=True)
+    assert _rows(base) == _rows(fast)
+
+
+def test_pagerank_symmetric_skip_equals_full_node_join(spark, symmetric_edges):
+    """On a symmetrized edge set the node-universe distinct + left join
+    are identities — symmetric_edges=True must change nothing."""
+    base = pagerank_micro(symmetric_edges, iterations=3)
+    fast = pagerank_micro(
+        symmetric_edges, iterations=3, broadcast_ranks=True, symmetric_edges=True
+    )
+    assert _rows(base) == _rows(fast)
+
+
+def test_iqr_bounds_array_percentile_equals_separate_calls(spark, sf_dir):
+    """percentile(c, array(q1, q3)) must be bit-equal to two separate
+    percentile calls (same buffer, same interpolation)."""
+    e = load_table(spark, sf_dir, "events").select("value", (F.col("value") * 3).alias("k"))
+    new = iqr_bounds(e, ["value", "k"]).collect()[0]
+    aggs = []
+    for c in ("value", "k"):
+        q1 = F.expr(f"percentile({c}, 0.25)")
+        q3 = F.expr(f"percentile({c}, 0.75)")
+        iqr = q3 - q1
+        aggs.append((q1 - F.lit(1.5) * iqr).alias(f"{c}_lower"))
+        aggs.append((q3 + F.lit(1.5) * iqr).alias(f"{c}_upper"))
+    old = e.agg(*aggs).collect()[0]
+    assert tuple(new) == tuple(old)
+
+
+def test_banded_levenshtein_equals_unbounded_thresholds(spark, sf_dir):
+    """The banded-verify rewrite relies on: for any threshold t,
+    (levenshtein(a,b) <= t)  ==  (levenshtein(a,b,t) >= 0), and the
+    returned distance is exact whenever it is <= t.  Pin it on real
+    fixture names across distances 0..large."""
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_name").alias("a")).limit(500)
+    pairs = c.select(
+        "a",
+        F.concat(F.substring("a", 1, 3), F.lit("~"), F.expr("substr(a, 5)")).alias("b1"),
+        F.reverse(F.col("a")).alias("b2"),
+        F.col("a").alias("b0"),
+    )
+    for b in ("b0", "b1", "b2"):
+        for t in (1, 2):
+            rows = pairs.select(
+                (F.levenshtein("a", b) <= t).alias("ub"),
+                (F.levenshtein("a", b, t) >= 0).alias("bd"),
+                F.when(F.levenshtein("a", b) <= t, F.levenshtein("a", b)).alias("d_ub"),
+                F.when(F.levenshtein("a", b, t) >= 0, F.levenshtein("a", b, t)).alias("d_bd"),
+            ).collect()
+            for r in rows:
+                assert r.ub == r.bd
+                assert r.d_ub == r.d_bd

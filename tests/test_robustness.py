@@ -216,3 +216,28 @@ def test_legacy_nanos_fixture_roundtrip(spark, tmp_path):
         ).fetchall()
     }
     assert got == oracle  # bit-identical epochs on both engines
+
+
+def test_get_session_extra_conf_wins_on_a_running_session(spark):
+    """`get_session` on a session that already runs (the driver builds its
+    own first): the caller's `extra_conf` wins over ENGINE_CONF, and a
+    session that carries the opposite values gets ENGINE_CONF's runtime
+    confs back."""
+    from real_time_big_data_iot_monitoring_pipeline_spark.session import ENGINE_CONF, get_session
+
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+    )
+    flipped = {k: "false" if ENGINE_CONF[k] == "true" else "true" for k in keys}
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        s = get_session(extra_conf=flipped)
+        assert s is spark
+        assert {k: s.conf.get(k) for k in keys} == flipped
+        s = get_session()
+        assert {k: s.conf.get(k) for k in keys} == {k: ENGINE_CONF[k] for k in keys}
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -1,5 +1,5 @@
-"""Tests for the custom stateful streaming operator
-(applyInPandasWithState EWMA) and the date-partitioned layout."""
+"""Tests for the custom stateful streaming operators
+(applyInPandasWithState) and the upsert sink's partition overwrite."""
 
 from __future__ import annotations
 
@@ -8,9 +8,8 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from real_time_big_data_iot_monitoring_pipeline_spark.sources import layout, sensors
+from real_time_big_data_iot_monitoring_pipeline_spark.sources import sensors
 from real_time_big_data_iot_monitoring_pipeline_spark.streaming import pipeline, stateful
-from tests.test_plans import plan_of
 
 
 def _python_ewma(values, alpha=0.2, threshold=30.0):
@@ -76,114 +75,32 @@ def test_state_is_bounded_per_key(spark, tmp_path):
     assert sensors.N_SENSORS <= emitted <= sensors.N_SENSORS * 4
 
 
-def test_date_partitioned_layout_prunes(spark, tmp_path):
-    """A date predicate on the partitioned layout must appear as
-    PartitionFilters (directory pruning), and the data must round-trip."""
-    df = sensors.readings(spark, hours=72)  # 3 days
-    path = str(tmp_path / "bydate")
-    layout.write_date_partitioned(df, path)
-
-    got = layout.read_date_range(spark, path, "2024-01-02", "2024-01-03")
-    plan = plan_of(got)
-    assert "PartitionFilters" in plan
-    assert "event_date" in plan.split("PartitionFilters")[1][:200]
-    # exactly day 2 rows
-    want = df.filter(
-        (F.col("timestamp") >= F.lit("2024-01-02 00:00:00").cast("timestamp"))
-        & (F.col("timestamp") < F.lit("2024-01-03 00:00:00").cast("timestamp"))
-    ).count()
-    assert got.count() == want > 0
-
-
 def test_partition_overwrite_is_idempotent(spark, tmp_path):
-    """Dynamic partition overwrite: re-writing the same day replaces it
-    instead of appending (the at-rest twin of the upsert sink)."""
+    """Dynamic partition overwrite in the upsert sink: replaying a
+    micro-batch replaces the partitions it touches instead of appending
+    duplicates, and a batch touching one partition leaves the others."""
     df = sensors.readings(spark, hours=24)
     path = str(tmp_path / "idem")
-    layout.write_date_partitioned(df, path)
+    write = pipeline.parquet_upsert_writer(path, partition_col="sensor_id")
+    write(df, 0)
     n1 = spark.read.parquet(path).count()
-    layout.write_date_partitioned(df, path, mode="overwrite")
+    write(df, 0)  # the same batch, replayed
     n2 = spark.read.parquet(path).count()
-    assert n1 == n2 == df.count()
+    one = df.select(F.min("sensor_id")).first()[0]
+    write(df.filter(F.col("sensor_id") == one), 1)
+    n3 = spark.read.parquet(path).count()
+    assert n1 == n2 == n3 == df.count()
 
 
-def test_stateful_extremes_compat_matches_batch(spark, tmp_path):
-    """applyInPandasWithState extremes twin: final per-sensor extremes
+def test_stateful_extremes_matches_batch(spark, tmp_path):
+    """applyInPandasWithState extremes fold: final per-sensor extremes
     and cents-exact average over a multi-micro-batch replay must equal
-    the batch aggregates — the ungated execution of the extremes fold
-    that `transformWithStateInPandas` carries where protobuf exists."""
+    the batch aggregates."""
     df = sensors.readings(spark, hours=3)
     path = str(tmp_path / "extc")
     df.repartition(3).write.mode("overwrite").parquet(path)
     stream = pipeline.file_source(spark, path, schema=df.schema, max_files_per_trigger=1)
     name = f"extc_{uuid.uuid4().hex[:8]}"
-    q = (
-        stateful.extremes_stream_compat(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {
-        r.sensor_id: r
-        for r in spark.table(name)
-        .groupBy("sensor_id")
-        .agg(
-            F.max("n_seen").alias("n_seen"),
-            F.expr("max_by(min_temp, n_seen)").alias("min_temp"),
-            F.expr("max_by(max_temp, n_seen)").alias("max_temp"),
-            F.expr("max_by(avg_temp, n_seen)").alias("avg_temp"),
-        )
-        .collect()
-    }
-    from real_time_big_data_iot_monitoring_pipeline_spark.functions.scalars import avg_fixed
-
-    want = {
-        r.sensor_id: r
-        for r in df.groupBy("sensor_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("temperature").alias("mn"),
-            F.max("temperature").alias("mx"),
-            avg_fixed(F.col("temperature")).alias("avg"),
-        )
-        .collect()
-    }
-    assert set(final) == set(want)
-    for sid, w in want.items():
-        g = final[sid]
-        assert (g.n_seen, g.min_temp, g.max_temp) == (w.n, w.mn, w.mx)
-        assert g.avg_temp == pytest.approx(w.avg, abs=1e-4)
-
-
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf (its state "
-    "protocol is protobuf-based); not installed in this container — the "
-    "operator is implemented and gated, applyInPandasWithState covers the "
-    "custom-state surface in tests",
-)
-def test_transform_with_state_extremes(spark, tmp_path):
-    """transformWithStateInPandas processor: final per-sensor extremes and
-    cents-exact average must equal the batch aggregates."""
-    df = sensors.readings(spark, hours=3)
-    path = str(tmp_path / "tws")
-    df.repartition(3).write.mode("overwrite").parquet(path)
-    stream = pipeline.file_source(spark, path, schema=df.schema, max_files_per_trigger=1)
-    import uuid as _uuid
-
-    name = f"tws_{_uuid.uuid4().hex[:8]}"
     q = (
         stateful.extremes_stream(stream)
         .writeStream.outputMode("update")
