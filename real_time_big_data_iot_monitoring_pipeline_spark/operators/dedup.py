@@ -533,7 +533,7 @@ def duplicate_components(
     doubling step, so the propagation distance doubles per round and
     convergence needs O(log diameter) rounds, not O(diameter).  (The
     1-hop-only variant silently fragmented a 24-hop chain at the default
-    iteration cap — caught by tools/scale_probe_components.py.)  Each
+    iteration cap — PERF.md, "Scale probe — duplicate components".)  Each
     round is two joins + one hash agg on the node key; the driver sees
     only a per-round scalar convergence count (no row collect), the
     standard driver-coordinated iterative-algorithm shape (same contract

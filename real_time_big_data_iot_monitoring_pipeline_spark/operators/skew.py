@@ -70,10 +70,11 @@ def salted_join(
     apply (e.g. the build side is too large to broadcast but the
     partition split heuristics miss, or a deterministic plan is required
     for a replayed pipeline).  Measured at 20M rows with a 60%-hot key
-    (tools/scale_probe_skew_aqe.py): AQE's runtime split wins 3.04x vs
-    1.20x for this salt — prefer AQE where it applies; the salt's cost
-    is the `salt_buckets`x dim replication.  The dim side grows `salt_buckets`x —
-    appropriate when |dim| << |fact|, the same regime as a broadcast.
+    (PERF.md, "Scale probe — skewed join mitigation"): AQE's runtime
+    split wins 3.04x vs 1.20x for this salt — prefer AQE where it
+    applies; the salt's cost is the `salt_buckets`x dim replication.
+    The dim side grows `salt_buckets`x — appropriate when |dim| <<
+    |fact|, the same regime as a broadcast.
 
     The salt hashes a monotonically-unique fact column when available;
     here we hash ALL fact columns (`xxhash64(*)`), which is deterministic

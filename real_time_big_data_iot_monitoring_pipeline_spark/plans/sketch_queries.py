@@ -256,8 +256,8 @@ def _spacesaving_candidates(toks: DataFrame, m: int) -> DataFrame:
     unique tail term), and the vectorized plan crosses over the naive
     full-vocabulary GROUP BY at ~20M tokens / 4.5M vocab on local[8]
     (7.3 s vs 9.7 s) while emitting ~90 candidates instead of
-    shuffling millions of keys (tools/scale_probe_heavyhitters.py,
-    PERF.md)."""
+    shuffling millions of keys (PERF.md, "Round-6 continuation
+    probes")."""
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F811
 

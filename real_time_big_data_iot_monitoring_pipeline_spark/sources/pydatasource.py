@@ -280,9 +280,9 @@ def _write_part(path: str, iterator, schema=None) -> PartFileCommit:
     Rows stream through a BOUNDED chunk buffer (64k rows -> one parquet
     row group via an incremental ParquetWriter) instead of materializing
     the whole task partition as Python dicts — the un-chunked version
-    OOM'd the probe harness at 2M rows/task (tools/scale_probe_lakehouse
-    .py), and at 100 TB task partitions are sized by bytes, not by what
-    a Python list can hold.
+    OOM'd the probe harness at 2M rows/task (PERF.md, "Lakehouse CoW-verb
+    scale probe"), and at 100 TB task partitions are sized by bytes, not
+    by what a Python list can hold.
 
     Schema handling: the REAL writers pass the table's Arrow `schema`
     (from the engine's StructType via `_spark_to_arrow_schema`), so

@@ -71,8 +71,8 @@ def stage_event_time_slices(
     order: the first micro-batch spans the full time range, the watermark
     jumps to ~max-10min, and nearly everything after it is dropped as
     "late" — correct streaming semantics, pathological replay
-    (tools/scale_probe_streaming.py documents the measurement; round-3
-    advice flagged the demo for exactly this).
+    (PERF.md, "Scale probe — streaming pipeline throughput", documents the
+    measurement; round-3 advice flagged the demo for exactly this).
 
     One bounded driver collect (the 2-value min/max bounds row); each
     slice is one filtered pass over the cached input."""

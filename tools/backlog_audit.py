@@ -18,9 +18,10 @@ reference):
 
 A query is *changed* when a segment it reaches differs from the anchor
 ("builder", "helper:<name>" in the builder's file, "<file>:<name>"
-elsewhere) or when the residue of a file it reaches differs as code
-("<file>"; compared by `ast.dump`, so a comment or blank line between defs
-changes nothing).  A builder absent at the anchor is changed.
+elsewhere) or when the residue of a file it reaches differs ("<file>").
+Both are compared as code, by `ast.dump` with every module, class and
+function docstring dropped, so a docstring, comment or blank-line edit
+changes nothing.  A builder absent at the anchor is changed.
 
 tests/test_oracle_parity.py runs every changed oracle query outside
 DRIVER_WINDOW in the default suite.
@@ -44,6 +45,7 @@ if REPO not in sys.path:  # `python tools/backlog_audit.py` puts tools/ first
 
 PKG = "real_time_big_data_iot_monitoring_pipeline_spark"
 WHOLE = "*"  # the node that reaches every segment of its file
+DOC_OWNERS = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _module_rel_file(modname: str, repo: str = REPO) -> str | None:
@@ -73,15 +75,18 @@ def _file_at(rel: str, commit: str | None, repo: str = REPO) -> str:
 
 
 def _split(src: str) -> tuple[dict[str, str], str, dict[str, list[ast.stmt]], list[ast.stmt]]:
-    """(name -> segment source, the residue's statements as `ast.dump`
-    text, name -> the segment's statements, the residue's statements) of
-    `src`; a name bound by several top-level statements owns them all.  A
-    file that does not parse is all residue, compared as text."""
+    """(name -> the segment's statements as `ast.dump` text, the residue's
+    statements likewise, name -> the segment's statements, the residue's
+    statements) of `src`, with every docstring dropped; a name bound by
+    several top-level statements owns them all.  A file that does not
+    parse is all residue, compared as text."""
     try:
         tree = ast.parse(src)
     except SyntaxError:
         return {}, src, {}, []
-    lines = src.splitlines()
+    for node in ast.walk(tree):
+        if isinstance(node, DOC_OWNERS) and ast.get_docstring(node, clean=False) is not None:
+            node.body = node.body[1:]
     stmts: dict[str, list[ast.stmt]] = {}
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -97,13 +102,12 @@ def _split(src: str) -> tuple[dict[str, str], str, dict[str, list[ast.stmt]], li
         for name in names:
             stmts.setdefault(name, []).append(node)
 
-    def span(node: ast.stmt) -> range:
-        return range((getattr(node, "decorator_list", None) or [node])[0].lineno - 1, node.end_lineno)
+    def dump(nodes: list[ast.stmt]) -> str:
+        return "\n".join(ast.dump(s) for s in nodes)
 
-    segs = {n: "\n".join(lines[i] for s in ss for i in span(s)) for n, ss in stmts.items()}
-    drop = {i for ss in stmts.values() for s in ss for i in span(s)}
-    rest = [s for s in tree.body if s.lineno - 1 not in drop]
-    return segs, "\n".join(ast.dump(s) for s in rest), stmts, rest
+    owned = {id(s) for ss in stmts.values() for s in ss}
+    rest = [s for s in tree.body if id(s) not in owned]
+    return {n: dump(ss) for n, ss in stmts.items()}, dump(rest), stmts, rest
 
 
 def _bindings(stmts: list[ast.stmt], repo: str) -> dict[str, tuple[str, str | None]]:

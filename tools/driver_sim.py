@@ -13,8 +13,7 @@ import time
 import duckdb
 
 # `python tools/driver_sim.py` puts tools/ (not the repo root) on
-# sys.path; add the root so `tests.compare` and the package resolve
-# (same preamble as scale_probe_streaming.py — round-3 advice).
+# sys.path; add the root so `tests.compare` and the package resolve.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.compare import assert_frames_match
@@ -48,6 +47,13 @@ def main() -> int:
         extra_conf=extra,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    # The effective session conf, so an RTBD_SIM_* sweep shows its axis took.
+    print("conf: " + ", ".join(
+        f"{k}={spark.conf.get(k)}" for k in (
+            "spark.master", "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.enabled", "spark.sql.session.timeZone",
+        )
+    ))
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
